@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.{Discovery, Merge, MergeException, MergeJobs}
+import graft.core.{Discovery, Merge, MergeException, MergeJobs, ParquetFileRef}
 
 /** End-to-end smoke driver for the merge pipeline surface: generates
   * fixture folders in a temp dir, then exercises discovery → smart
@@ -81,11 +81,12 @@ object Smoke {
     catch { case e: MergeException => println(s"[smoke] disjoint error ok: ${e.getMessage}") }
     try { Merge.probeSchema(spark, s"$root/a/bad.parquet"); println("[smoke] ERROR: bad file did not fail") }
     catch { case e: MergeException => println(s"[smoke] unreadable error ok: ${e.getMessage}") }
-    println(s"[smoke] mismatch probe on bad file: " +
-      MergeJobs.checkSchemaMismatch(spark, Seq(s"$root/a/bad.parquet", s"$root/a/daily.parquet")))
+    val badPair = Seq(s"$root/a/bad.parquet", s"$root/a/daily.parquet")
+    val badJob  = MergeJobs.buildJob(spark, badPair.map(p => ParquetFileRef(p, Discovery.fileName(p))), 1)
+    println(s"[smoke] mismatch probe on bad file: ${badJob.hasSchemaMismatch}")
 
     // 6. internal column kept in parquet merge, dropped in CSV
-    Merge.merge(spark, Seq(s"$root/a/indexed.parquet"), s"$out/merged/indexed.parquet",
+    Merge.merge(Merge.alignedUnion(spark, Seq(s"$root/a/indexed.parquet")), s"$out/merged/indexed.parquet",
       csvPath = Some(s"$out/merged/indexed.csv"))
     val mergedIdx = spark.read.parquet(s"$out/merged/indexed.parquet")
     val csvIdx = spark.read.option("header", "true").csv(s"$out/merged/indexed.csv")

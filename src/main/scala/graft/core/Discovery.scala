@@ -25,14 +25,15 @@ object Discovery {
   def scanFolders(spark: SparkSession, roots: Seq[String]): Seq[ParquetFileRef] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val out  = ArrayBuffer.empty[ParquetFileRef]
-    roots.distinct.foreach { root =>
-      val rootPath = new Path(root)
-      val fs       = rootPath.getFileSystem(conf)
+    // Full URI strings (scheme + authority preserved): hdfs://nn/a/b
+    // stays addressable on its own filesystem instead of silently
+    // resolving against the default FS downstream. Qualified paths also
+    // dedup `/x/a` and `/x/a/` as one root.
+    val qualified = roots.map(new Path(_)).map(p => p.getFileSystem(conf).makeQualified(p))
+    qualified.distinct.foreach { rootPath =>
+      val fs = rootPath.getFileSystem(conf)
       if (fs.exists(rootPath)) {
-        // Full URI strings (scheme + authority preserved): hdfs://nn/a/b
-        // stays addressable on its own filesystem instead of silently
-        // resolving against the default FS downstream.
-        val rootDir = fs.makeQualified(rootPath).toString
+        val rootDir = rootPath.toString
         val it      = fs.listFiles(rootPath, true)
         while (it.hasNext) {
           val st = it.next()

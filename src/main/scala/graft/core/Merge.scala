@@ -14,27 +14,22 @@ final class MergeException(msg: String) extends RuntimeException(msg)
   *
   * Scale notes (the part the reference gets wrong, main.rs:580-601: it
   * buffers every record batch in RAM, single-threaded):
+  *  - Each file's footer is probed once, on the driver, and the probed
+  *    schemas decide the one schema the batch is read with
+  *    ([[readSchema]]), before any row is read (main.rs:549-578).
+  *  - Every batch, identical or drifted, is then read by ONE multi-path
+  *    parquet scan under that schema (one `FileSourceScanExec` that
+  *    bin-packs splits across executors), never by N union legs: the
+  *    parquet reader resolves columns by name, so a drifted file's
+  *    reordered and extra columns fall away in the scan itself.
   *  - The union is never materialized on the driver; it is a lazy
-  *    `DataFrame` that Spark executes as one pipelined
-  *    scan→project→write stage with one task per file split. No shuffle:
-  *    union is partition concatenation.
-  *  - The compatible fast path reads ALL files through a single
-  *    multi-path parquet scan (one `FileSourceScanExec` that bin-packs
-  *    splits across executors) instead of N union legs.
+  *    `DataFrame` that Spark executes as one pipelined scan→write stage
+  *    with one task per file split. No shuffle.
   *  - `singleFile = true` mirrors the reference's one-output-file
   *    contract via `coalesce(1)` (narrow, no shuffle). At 100 TB pass
   *    `singleFile = false` and the write stays fully parallel.
   */
 object Merge {
-
-  /** Decided before any row is read, mirroring the reference's
-    * analyze-before-execute split (main.rs:549-578). */
-  sealed trait AlignPlan
-  /** Identical schemas: positional UNION ALL (main.rs:564-569). */
-  case object FastPath extends AlignPlan
-  /** Schema drift: project every file to the common columns, first
-    * file's column order (main.rs:570-577). */
-  final case class Intersect(columns: Seq[String]) extends AlignPlan
 
   /** Footer-only schema probe (main.rs:433-437); raises the reference's
     * "Cannot read schema from" error (main.rs:557-561) on failure. */
@@ -42,42 +37,36 @@ object Merge {
     try spark.read.parquet(file).schema
     catch { case _: Exception => throw new MergeException(s"Cannot read schema from: $file") }
 
-  def plan(schemas: Seq[StructType]): AlignPlan =
-    if (SchemaAlign.allCompatible(schemas)) FastPath
+  /** The schema a batch is read with: the first schema when all are
+    * compatible (positional UNION ALL, main.rs:564-569), otherwise the
+    * common columns in the first file's order (main.rs:570-577). */
+  def readSchema(schemas: Seq[StructType]): StructType = {
+    if (schemas.isEmpty) throw new MergeException("No files in batch")
+    if (SchemaAlign.allCompatible(schemas)) schemas.head
     else {
       val common = SchemaAlign.commonColumns(schemas)
       if (common.isEmpty)
         throw new MergeException("No common columns found across all files")
-      Intersect(common)
-    }
-
-  /** Aligned UNION ALL over parquet `files` as a lazy DataFrame. */
-  def alignedUnion(spark: SparkSession, files: Seq[String]): DataFrame = {
-    if (files.isEmpty) throw new MergeException("No files in batch")
-    val schemas = files.map(probeSchema(spark, _))
-    plan(schemas) match {
-      case FastPath =>
-        // One distributed scan over every file; passing the schema skips
-        // a second footer-inference pass.
-        spark.read.schema(schemas.head).parquet(files: _*)
-      case Intersect(common) =>
-        val cols = common.map(col)
-        files
-          .map(f => spark.read.parquet(f).select(cols: _*))
-          .reduce(_ unionByName _)
+      SchemaAlign.projectedSchema(schemas.head, common)
     }
   }
 
-  /** Aligned UNION ALL over already-loaded DataFrames — same planning as
-    * [[alignedUnion]] for in-memory composition (schema drift between
-    * the inputs resolves to the first input's common-column order). */
+  /** Aligned UNION ALL over parquet `files` as a lazy DataFrame: one
+    * scan of every file under [[readSchema]] of their footers. */
+  def alignedUnion(spark: SparkSession, files: Seq[String]): DataFrame =
+    spark.read.schema(readSchema(files.map(probeSchema(spark, _)))).parquet(files: _*)
+
+  /** Aligned UNION ALL over already-loaded DataFrames — same alignment
+    * as [[alignedUnion]] for in-memory composition: compatible inputs
+    * union positionally, drifted ones are projected to the first
+    * input's common-column order first. */
   def alignedUnionOf(dfs: Seq[DataFrame]): DataFrame = {
-    if (dfs.isEmpty) throw new MergeException("No files in batch")
-    plan(dfs.map(_.schema)) match {
-      case FastPath => dfs.reduce(_ union _)
-      case Intersect(common) =>
-        val cols = common.map(col)
-        dfs.map(_.select(cols: _*)).reduce(_ unionByName _)
+    val schemas = dfs.map(_.schema)
+    val aligned = readSchema(schemas)
+    if (SchemaAlign.allCompatible(schemas)) dfs.reduce(_ union _)
+    else {
+      val cols = aligned.fieldNames.toSeq.map(col)
+      dfs.map(_.select(cols: _*)).reduce(_ union _)
     }
   }
 
@@ -135,17 +124,17 @@ object Merge {
     }
   }
 
-  /** Full merge job: align → union → parquet sink; returns rows written
-    * (main.rs:601-613 returns the same count). `singleFile = true`
-    * produces one plain parquet FILE like the reference; `false` keeps
-    * Spark's fully parallel directory output for scale. */
+  /** Full merge job: writes the aligned batch `df` (see [[alignedUnion]])
+    * to the parquet sink and returns rows written (main.rs:601-613
+    * returns the same count). `singleFile = true` produces one plain
+    * parquet FILE like the reference; `false` keeps Spark's fully
+    * parallel directory output for scale. */
   def merge(
-      spark: SparkSession,
-      files: Seq[String],
+      df: DataFrame,
       outPath: String,
       singleFile: Boolean = true,
       csvPath: Option[String] = None): Long = {
-    val df = alignedUnion(spark, files)
+    val spark = df.sparkSession
     if (singleFile) writeSingleFile(df, outPath)
     else df.write.mode("overwrite").parquet(outPath)
     csvPath.foreach(p => exportCsv(spark, outPath, p, singleFile))

@@ -32,7 +32,7 @@ class DiscoverySpec extends AnyFunSuite {
 
   test("scan: duplicate roots deduped (main.rs:118-124)") {
     val once = Discovery.scanFolders(spark, Seq(s"$root/folderA"))
-    val twice = Discovery.scanFolders(spark, Seq(s"$root/folderA", s"$root/folderA"))
+    val twice = Discovery.scanFolders(spark, Seq(s"$root/folderA", s"$root/folderA", s"$root/folderA/"))
     assert(once.size == twice.size)
   }
 

@@ -3,6 +3,8 @@ package graft.core
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -19,6 +21,8 @@ class MergeSpec extends AnyFunSuite {
   /** Plain single parquet FILE (the reference's unit of merge). */
   private def writeSingle(df: DataFrame, dest: String): Unit =
     Merge.writeSingleFile(df, dest)
+
+  private def ref(path: String) = ParquetFileRef(path, Discovery.fileName(path))
 
   test("B1 identical: positional union, row count = sum of inputs") {
     writeSingle(Seq((1L, "x", 1.5), (2L, "y", 2.5)).toDF("id", "name", "score"), s"$root/b1/f1.parquet")
@@ -37,6 +41,31 @@ class MergeSpec extends AnyFunSuite {
       Seq(s"$root/b2/p1.parquet", s"$root/b2/p2.parquet", s"$root/b2/p3.parquet"))
     assert(out.columns.toSeq == Seq("id", "name"))
     assert(out.count() == 3)
+    // the drifted batch is read by one scan, not one union leg per file
+    val plan = out.queryExecution.executedPlan
+    assert(plan.collect { case s: FileSourceScanExec => s }.size == 1, plan.treeString)
+    assert(plan.collect { case u: UnionExec => u }.isEmpty, plan.treeString)
+  }
+
+  test("drift: one scan reads the same rows as a per-file select + unionByName") {
+    // reordered columns, an extra column, type conflicts (v int vs
+    // double, id int32 vs int64) and NULLs in the common columns
+    writeSingle(Seq((1L, Option("a"), 10, Option(100L)), (2L, None, 20, None))
+      .toDF("id", "name", "v", "n"), s"$root/proof/p1.parquet")
+    writeSingle(Seq((Option(300L), 3.5, Option("c"), 9, 3), (None, 4.5, Option("a"), 8, 4))
+      .toDF("n", "v", "name", "extra", "id"), s"$root/proof/p2.parquet")
+    writeSingle(Seq((None: Option[String], 5L, Option(100L), 50), (Option("e"), 6L, None, 60))
+      .toDF("name", "id", "n", "v"), s"$root/proof/p3.parquet")
+    val files = Seq("p1", "p2", "p3").map(f => s"$root/proof/$f.parquet")
+    val out = Merge.alignedUnion(spark, files)
+    val common = Seq("name", "n")
+    assert(out.columns.toSeq == common)
+    val reference = files
+      .map(f => spark.read.parquet(f).select(common.map(col): _*))
+      .reduce(_ unionByName _)
+    assert(out.count() == 6)
+    assert(out.exceptAll(reference).isEmpty)
+    assert(reference.exceptAll(out).isEmpty)
   }
 
   test("B3 type conflict: column with differing type excluded") {
@@ -67,8 +96,8 @@ class MergeSpec extends AnyFunSuite {
 
   test("B5 pandas index: kept in parquet merge, dropped from CSV") {
     writeSingle(Seq((0L, 1L, "k")).toDF("__index_level_0__", "id", "name"), s"$root/b5/p1.parquet")
-    val rows = Merge.merge(spark, Seq(s"$root/b5/p1.parquet"), s"$root/b5/out.parquet",
-      csvPath = Some(s"$root/b5/out.csv"))
+    val rows = Merge.merge(Merge.alignedUnion(spark, Seq(s"$root/b5/p1.parquet")),
+      s"$root/b5/out.parquet", csvPath = Some(s"$root/b5/out.csv"))
     assert(rows == 1)
     assert(spark.read.parquet(s"$root/b5/out.parquet").columns.contains("__index_level_0__"))
     val csv = spark.read.option("header", "true").csv(s"$root/b5/out.csv")
@@ -82,8 +111,8 @@ class MergeSpec extends AnyFunSuite {
     val e = intercept[MergeException](Merge.probeSchema(spark, bad))
     assert(e.getMessage.startsWith("Cannot read schema from:"))
     writeSingle(Seq(Tuple1(1L)).toDF("a"), s"$root/b9/ok.parquet")
-    assert(MergeJobs.checkSchemaMismatch(spark, Seq(bad, s"$root/b9/ok.parquet")))
-    assert(!MergeJobs.checkSchemaMismatch(spark, Seq(s"$root/b9/ok.parquet")))
+    assert(MergeJobs.buildJob(spark, Seq(bad, s"$root/b9/ok.parquet").map(ref), 1).hasSchemaMismatch)
+    assert(!MergeJobs.buildJob(spark, Seq(ref(s"$root/b9/ok.parquet")), 1).hasSchemaMismatch)
   }
 
   test("merge row count equals sum of input counts (property, multiple shapes)") {
@@ -111,6 +140,22 @@ class MergeSpec extends AnyFunSuite {
     assert(outcomes.count(_.isLeft) == 1)
     assert(remaining.map(_.name) == Seq("clash"))
     assert(spark.read.parquet(s"$root/w3/out/merged/same.parquet").count() == 2)
+  }
+
+  test("runAll: a file changed since buildJob fails its batch and writes nothing") {
+    writeSingle(Seq((1L, "a")).toDF("id", "t"), s"$root/stale/x/same.parquet")
+    writeSingle(Seq((2L, "b")).toDF("id", "t"), s"$root/stale/y/same.parquet")
+    val files = Discovery.scanFolders(spark, Seq(s"$root/stale/x", s"$root/stale/y"))
+    val job = MergeJobs.buildJob(spark, files, 1)
+    // rewritten without the common column `t`: read under the stored
+    // schema it would come back as NULLs
+    writeSingle(Seq((3L, 4L)).toDF("id", "u"), s"$root/stale/y/same.parquet")
+    val (outcomes, _) = MergeJobs.runAll(spark, Seq(job), s"$root/stale/out", exportCsv = true)
+    val changed = files.find(_.fullPath.contains("/stale/y/")).get.fullPath
+    assert(outcomes == Seq(Left((job, s"File changed since its batch was built: $changed"))))
+    val merged = new java.io.File(s"$root/stale/out/merged")
+    assert(!new java.io.File(merged, "same.parquet").exists())
+    assert(!new java.io.File(merged, "same.csv").exists())
   }
 
   test("writeSingleFile: failed write leaves no staging/tmp litter and keeps prior output") {
