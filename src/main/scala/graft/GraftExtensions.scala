@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions._
+import graft.functions.GraftFunctions
 
 /** Cluster deployment entry point: registers the engine's native
   * Catalyst expressions into every session created on a cluster
@@ -19,90 +19,19 @@ import graft.functions._
   * and `expr("...")` users get the functions everywhere (thriftserver,
   * notebooks, spark-submit). The per-session
   * [[graft.functions.GraftFunctions.register]] remains for embedded /
-  * library use. (The reference `shanytc/parquet-merger` has no function
-  * surface at all — `src/main.rs` — this belongs to the north-star
-  * extension mandate.)
+  * library use; both inject the same
+  * [[graft.functions.GraftFunctions.sqlFunctions]] table. (The
+  * reference `shanytc/parquet-merger` has no function surface at all —
+  * `src/main.rs` — this belongs to the north-star extension mandate.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def intArg(e: Expression, fn: String): Int = e.eval() match {
-    case n: java.lang.Number => n.intValue()
-    case other =>
-      throw new IllegalArgumentException(s"$fn expects a constant integer, got: $other")
-  }
-
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two double arrays"),
-      (es: Seq[Expression]) => CosineSimilarity(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("dot_product"),
-      info("dot_product", "dot_product(a, b) - dot product of two double arrays"),
-      (es: Seq[Expression]) => DotProduct(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("char_ngrams"),
-      info("char_ngrams", "char_ngrams(text, n) - all char n-grams, one code-point pass"),
-      (es: Seq[Expression]) => CharNgrams(es(0), intArg(es(1), "char_ngrams"))))
-    ext.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "minhash_sig(arr, k) - k-hash MinHash signature"),
-      (es: Seq[Expression]) => MinHashSignature(es(0), intArg(es(1), "minhash_sig"))))
-    ext.injectFunction((FunctionIdentifier("bottomk_by_hash"),
-      info("bottomk_by_hash", "bottomk_by_hash(arr, k) - k smallest-by-hash elements"),
-      (es: Seq[Expression]) => BottomKByHash(es(0), intArg(es(1), "bottomk_by_hash"))))
-    ext.injectFunction((FunctionIdentifier("word_shingles"),
-      info("word_shingles", "word_shingles(text, n) - distinct word n-grams"),
-      (es: Seq[Expression]) => WordShingles(es(0), intArg(es(1), "word_shingles"))))
-    ext.injectFunction((FunctionIdentifier("simhash_sig"),
-      info("simhash_sig", "simhash_sig(tokens) - 64-bit SimHash of a token array"),
-      (es: Seq[Expression]) => SimHashSignature(es(0))))
-    ext.injectFunction((FunctionIdentifier("oph_minhash_sig"),
-      info("oph_minhash_sig", "oph_minhash_sig(arr, k) - one-permutation MinHash, k bins"),
-      (es: Seq[Expression]) => OphMinHash(es(0), intArg(es(1), "oph_minhash_sig"))))
-    ext.injectFunction((FunctionIdentifier("heavy_hitters"),
-      info("heavy_hitters", "heavy_hitters(col, k) - Misra-Gries frequent items"),
-      (es: Seq[Expression]) =>
-        HeavyHitters(es(0), intArg(es(1), "heavy_hitters")).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("topk_freq"),
-      info("topk_freq", "topk_freq(key, cnt, k) - mergeable top-k by (cnt DESC, key)"),
-      (es: Seq[Expression]) =>
-        TopKFreq(es(0), es(1), intArg(es(2), "topk_freq")).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("topk_by_score"),
-      info("topk_by_score",
-        "topk_by_score(id, score, k) - mergeable top-k selection by (score DESC, id)"),
-      (es: Seq[Expression]) =>
-        TopKByScore(es(0), es(1), intArg(es(2), "topk_by_score")).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("sorted_intersect_count"),
-      info("sorted_intersect_count",
-        "sorted_intersect_count(a, b) - |A∩B| of two ascending array<bigint> (non-null elements)"),
-      (es: Seq[Expression]) => SortedIntersectCount(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("md5_low60"),
-      info("md5_low60", "md5_low60(s) - portable 60-bit md5 hash (first 15 hex chars)"),
-      (es: Seq[Expression]) => Md5Low60(es(0))))
-    ext.injectFunction((FunctionIdentifier("md5_minhash_sig"),
-      info("md5_minhash_sig",
-        "md5_minhash_sig(arr, k) - MinHash over the portable KM double-hashing md5 family"),
-      (es: Seq[Expression]) => Md5MinHashSig(es(0), intArg(es(1), "md5_minhash_sig"))))
-    ext.injectFunction((FunctionIdentifier("md5_simhash_sig"),
-      info("md5_simhash_sig", "md5_simhash_sig(tokens) - portable 60-bit SimHash"),
-      (es: Seq[Expression]) => Md5SimHashSig(es(0))))
-    ext.injectFunction((FunctionIdentifier("kmv_min_hashes"),
-      info("kmv_min_hashes",
-        "kmv_min_hashes(h, k) - KMV distinct synopsis: k smallest distinct hashes, ascending"),
-      (es: Seq[Expression]) =>
-        KmvMinHashes(es(0), intArg(es(1), "kmv_min_hashes")).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("bottomk_sample"),
-      info("bottomk_sample",
-        "bottomk_sample(h, v, k) - values of the k smallest (hash, value) pairs, ascending"),
-      (es: Seq[Expression]) =>
-        BottomKSample(es(0), es(1), intArg(es(2), "bottomk_sample")).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("pair_ids"),
-      info("pair_ids", "pair_ids(array<long>) - generator: all i<j pairs as (a, b)"),
-      (es: Seq[Expression]) => PairExpandIds(es(0))))
-    ext.injectFunction((FunctionIdentifier("pair_sized"),
-      info("pair_sized",
-        "pair_sized(array<struct<long,long>>) - generator: i<j pairs as (a, na, b, nb)"),
-      (es: Seq[Expression]) => PairExpandSized(es(0))))
+    GraftFunctions.sqlFunctions.foreach { case (name, usage, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
+        builder))
+    }
     // optimizer extension: naive `k = k AND abs(t1-t2) <= W` joins are
     // rewritten to the banded (k, time-bin) equi-join — see
     // graft.plans.BandedRangeJoin

@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   * md5-portable hash family, q18 the portable KMV synopsis, and ev14
   * the portable bottom-k-by-hash sample — all oracle-exact — so their
   * rows here document sketch quality as an algorithm property, and
-  * the dd0X_native_* / q18_native_hll / ev14_native_gk rows carry the
-  * quality floors for the xxhash/HLL/GK production paths whose
-  * engine-internal state no external oracle can reproduce.
+  * the q18_native_hll / ev14_native_gk rows carry the quality floors
+  * for the builtin HLL/GK paths whose engine-internal state no
+  * external oracle can reproduce.
   *
   * Exact tiers: dd06 (all-pairs Jaccard >= 0.8, oracle-exact) for the
   * near-dup sketches; built-in exact `percentile` for ev14's GK
@@ -38,10 +38,9 @@ object SketchQuality {
     val exactPairs = SparkEntry.queries("dd06_exact_jaccard")(spark, sfDir)
       .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-    def pairMetricsOf(name: String, df: org.apache.spark.sql.DataFrame)
-        : (String, Seq[(String, Double)]) = {
+    def pairMetrics(name: String): (String, Seq[(String, Double)]) = {
       // bounded by the audit corpus' pair count (QA tooling, see above)
-      val got = df.select("a", "b").collect()
+      val got = SparkEntry.queries(name)(spark, sfDir).select("a", "b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val tp = (got intersect exactPairs).size.toDouble
       (name, Seq(
@@ -50,9 +49,6 @@ object SketchQuality {
         "precision_vs_dd06" -> (if (got.isEmpty) 1.0 else tp / got.size),
         "recall_vs_dd06" -> (if (exactPairs.isEmpty) 1.0 else tp / exactPairs.size)))
     }
-
-    def pairMetrics(name: String): (String, Seq[(String, Double)]) =
-      pairMetricsOf(name, SparkEntry.queries(name)(spark, sfDir))
 
     // ev14's GK sketch returns an ACTUAL data value, while the exact
     // `percentile` interpolates between order statistics — so value
@@ -169,16 +165,8 @@ object SketchQuality {
         (if (exactEdges.isEmpty) 1.0 else tp / exactEdges.size)
     })
 
-    // the xxhash-native sketch tiers (production paths; their hashes
-    // are not reproducible outside the engine, so quality floors live
-    // here while the registered md5-portable dd02/dd03/dd04 are
-    // oracle-exact since r7)
-    val natives = graft.ops.DedupOps.nativeSketchTiers(spark, sfDir)
-      .map { case (name, df) => pairMetricsOf(name, df) }
-
     Seq(pairMetrics("dd02_minhash_lsh"), pairMetrics("dd03_simhash"),
-      pairMetrics("dd04_ngram_jaccard")) ++ natives ++
-      Seq(ev14, ev14n, q18, q18n, vs10, vs10Curve)
+      pairMetrics("dd04_ngram_jaccard"), ev14, ev14n, q18, q18n, vs10, vs10Curve)
   }
 
   def main(args: Array[String]): Unit = {
@@ -198,7 +186,7 @@ object SketchQuality {
       else f"$v%.6f"
     val notes =
       "All registered queries are oracle-exact since r7; the *_native_* rows " +
-        "carry the accuracy floors for the engine-internal production tiers. " +
+        "carry the accuracy floors for the builtin engine-internal sketches. " +
         "ev14 (registered) is the portable bottom-k-by-hash sample quantile: " +
         "EXACT below its k=10^4 cap (every audit SF's groups; rank error 0 here), " +
         "a deterministic ~sqrt(q(1-q)/k) sample estimator above it — sf0.1's " +
@@ -210,9 +198,9 @@ object SketchQuality {
         "q18_native_hll carries the builtin HLL++ accuracy floor. " +
         "dd02/dd03/dd04 (registered) are md5-portable and ORACLE-EXACT since r7 — " +
         "their rows here measure algorithmic recall of the LSH/bottom-k/simhash " +
-        "candidate stages vs the dd06 exact tier, not correctness; the " +
-        "dd0X_native_* rows are the xxhash production paths, floor-enforced in " +
-        "SketchQualitySpec. " +
+        "candidate stages vs the dd06 exact tier, not correctness; they are the " +
+        "only near-dup tier (the xxhash tier, whose recall matched theirs, was " +
+        "removed). " +
         "vs10: numbers are the adversarial near-uniform test-corpus datapoint, " +
         "not the index's quality claim (vs10 the query is oracle-exact by plan " +
         "definition; IvfIndexSpec enforces recall >= 0.95 on a clustered corpus, " +

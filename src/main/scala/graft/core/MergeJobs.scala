@@ -65,7 +65,10 @@ object MergeJobs {
   /** W3 `merge_batches` loop (main.rs:298-404): outputs land under
     * `outDir/merged/<sanitized-name>.parquet` (dir main.rs:322-329, path
     * main.rs:351-352); each job is tried independently and failures are
-    * accumulated, not fatal (main.rs:355-375); when
+    * accumulated, not fatal (main.rs:355-375); a job whose output path
+    * an earlier job of the same call already used fails before it
+    * writes (two batches can get one name: `sales_2023` and
+    * `sales_2024` both become `sales`); when
     * `autoRemoveCompleted` (reference default ON, main.rs:108, 380-385)
     * the returned remaining-job list keeps only the failures. */
   def runAll(
@@ -76,17 +79,21 @@ object MergeJobs {
       singleFile: Boolean = true,
       autoRemoveCompleted: Boolean = true)
       : (Seq[Either[(MergeJob, String), MergeResult]], Seq[MergeJob]) = {
+    val usedDests = scala.collection.mutable.Set.empty[String]
     val outcomes = jobs.map { job =>
       try {
         if (job.files.isEmpty) throw new MergeException(s"No files found for batch: ${job.name}")
+        val safe = Naming.sanitizeFilename(job.name)
+        val dest = s"$outDir/merged/$safe.parquet"
+        if (usedDests.contains(dest))
+          throw new MergeException(s"Output name already used in this run: $dest")
         val schema = job.readSchema.fold(e => throw new MergeException(e), identity)
         val paths  = job.files.map(_.fullPath)
         paths.zip(job.stamps).foreach { case (p, s) =>
           if (stat(spark, p) != s)
             throw new MergeException(s"File changed since its batch was built: $p")
         }
-        val safe = Naming.sanitizeFilename(job.name)
-        val dest = s"$outDir/merged/$safe.parquet"
+        usedDests += dest
         val csv  = if (exportCsv) Some(s"$outDir/merged/$safe.csv") else None
         val df   = spark.read.schema(schema).parquet(paths: _*)
         Right(MergeResult(job, Merge.merge(df, dest, singleFile, csv)))

@@ -83,6 +83,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   * the custom expressions. Idempotent. */
 object GraftFunctions {
   import org.apache.spark.sql.Column
+  import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
   import org.apache.spark.sql.graftbridge.Bridge
 
   /** `cosine_sim(a, b)` as a Column over `array<double>` inputs. */
@@ -96,16 +97,6 @@ object GraftFunctions {
   /** `minhash_sig(arr, k)` as a Column over `array<string>` input. */
   def minhash_sig(arr: Column, numHashes: Int): Column =
     Bridge.column(MinHashSignature(Bridge.expression(arr), numHashes))
-
-  /** `oph_minhash_sig(arr, k)`: one-permutation MinHash (k bins, one
-    * hash per element, rotation densification) — the k×-cheaper scale
-    * path for signature computation. */
-  def oph_minhash_sig(arr: Column, numBins: Int): Column =
-    Bridge.column(OphMinHash(Bridge.expression(arr), numBins))
-
-  /** `bottomk_by_hash(arr, k)`: the k smallest-by-hash elements. */
-  def bottomk_by_hash(arr: Column, k: Int): Column =
-    Bridge.column(BottomKByHash(Bridge.expression(arr), k))
 
   /** `heavy_hitters(col, k)` aggregate: Misra-Gries candidate frequent
     * items as map<string,bigint> (exact when k >= distinct values). */
@@ -134,10 +125,6 @@ object GraftFunctions {
     * code-point pass. */
   def char_ngrams(c: Column, n: Int): Column =
     Bridge.column(CharNgrams(Bridge.expression(c), n))
-
-  /** `simhash_sig(tokens)`: 64-bit SimHash of a token array. */
-  def simhash_sig(c: Column): Column =
-    Bridge.column(SimHashSignature(Bridge.expression(c)))
 
   /** `pq_block_codes(v, blockDim, cids, codebook)`: per-block PQ
     * argmin codes + integer-quantized block distances, one map-side
@@ -219,73 +206,71 @@ object GraftFunctions {
     Bridge.column(SortedXxHash64Set(Bridge.expression(c)))
 
   /** Foldable integer argument of a SQL call (Int or Long literal). */
-  private def intArg(e: org.apache.spark.sql.catalyst.expressions.Expression, fn: String): Int =
-    e.eval() match {
-      case n: java.lang.Number => n.intValue()
-      case other =>
-        throw new IllegalArgumentException(s"$fn expects a constant integer, got: $other")
-    }
+  private def intArg(e: Expression, fn: String): Int = e.eval() match {
+    case n: java.lang.Number => n.intValue()
+    case other =>
+      throw new IllegalArgumentException(s"$fn expects a constant integer, got: $other")
+  }
 
-  /** Register the custom expressions for SQL / `expr(...)` use.
+  /** The SQL function surface, one entry per name: (name, usage,
+    * builder). Both registration paths — [[register]] per session and
+    * [[graft.GraftExtensions]] per cluster — are served from this one
+    * table, so they cannot drift apart. */
+  private[graft] val sqlFunctions: Seq[(String, String, FunctionBuilder)] = Seq(
+    ("cosine_sim", "cosine_sim(a, b) - cosine similarity of two double arrays",
+      es => CosineSimilarity(es(0), es(1))),
+    ("dot_product", "dot_product(a, b) - dot product of two double arrays",
+      es => DotProduct(es(0), es(1))),
+    ("char_ngrams", "char_ngrams(text, n) - all char n-grams, one code-point pass",
+      es => CharNgrams(es(0), intArg(es(1), "char_ngrams"))),
+    ("minhash_sig", "minhash_sig(arr, k) - k-hash MinHash signature",
+      es => MinHashSignature(es(0), intArg(es(1), "minhash_sig"))),
+    ("word_shingles", "word_shingles(text, n) - distinct word n-grams",
+      es => WordShingles(es(0), intArg(es(1), "word_shingles"))),
+    ("heavy_hitters", "heavy_hitters(col, k) - Misra-Gries frequent items",
+      es => HeavyHitters(es(0), intArg(es(1), "heavy_hitters")).toAggregateExpression()),
+    ("topk_freq", "topk_freq(key, cnt, k) - mergeable top-k by (cnt DESC, key)",
+      es => TopKFreq(es(0), es(1), intArg(es(2), "topk_freq")).toAggregateExpression()),
+    ("topk_by_score",
+      "topk_by_score(id, score, k) - mergeable top-k selection by (score DESC, id)",
+      es => TopKByScore(es(0), es(1), intArg(es(2), "topk_by_score")).toAggregateExpression()),
+    ("sorted_intersect_count",
+      "sorted_intersect_count(a, b) - |A∩B| of two ascending array<bigint> (non-null elements)",
+      es => SortedIntersectCount(es(0), es(1))),
+    ("md5_low60", "md5_low60(s) - portable 60-bit md5 hash (first 15 hex chars)",
+      es => Md5Low60(es(0))),
+    ("md5_minhash_sig",
+      "md5_minhash_sig(arr, k) - MinHash over the portable KM double-hashing md5 family",
+      es => Md5MinHashSig(es(0), intArg(es(1), "md5_minhash_sig"))),
+    ("md5_simhash_sig", "md5_simhash_sig(tokens) - portable 60-bit SimHash",
+      es => Md5SimHashSig(es(0))),
+    ("kmv_min_hashes",
+      "kmv_min_hashes(h, k) - KMV distinct synopsis: k smallest distinct hashes, ascending",
+      es => KmvMinHashes(es(0), intArg(es(1), "kmv_min_hashes")).toAggregateExpression()),
+    ("bottomk_sample",
+      "bottomk_sample(h, v, k) - values of the k smallest (hash, value) pairs, ascending",
+      es => BottomKSample(es(0), es(1), intArg(es(2), "bottomk_sample")).toAggregateExpression()),
+    ("pair_ids", "pair_ids(array<long>) - generator: all i<j pairs as (a, b)",
+      es => PairExpandIds(es(0))),
+    ("pair_sized",
+      "pair_sized(array<struct<long,long>>) - generator: i<j pairs as (a, na, b, nb)",
+      es => PairExpandSized(es(0))),
+    ("payload_windows",
+      "payload_windows(payload) - distinct 8-byte-every-4-bytes hex windows of a binary",
+      es => PayloadWindows(es(0))),
+    ("sorted_xxhash64",
+      "sorted_xxhash64(arr) - ascending per-element xxhash64 of a string array",
+      es => SortedXxHash64Set(es(0))))
+
+  /** Register [[sqlFunctions]] for SQL / `expr(...)` use.
     * Idempotent: re-registering the same session is a no-op so repeated
     * query invocations don't spam "function replaced" warnings. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     if (reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim"))) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSignature(exprs(0),
-        intArg(exprs(1), "minhash_sig")), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bottomk_by_hash", exprs => BottomKByHash(exprs(0),
-        intArg(exprs(1), "bottomk_by_hash")), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "heavy_hitters", exprs => HeavyHitters(exprs(0),
-        intArg(exprs(1), "heavy_hitters")).toAggregateExpression(), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_freq", exprs => TopKFreq(exprs(0), exprs(1),
-        intArg(exprs(2), "topk_freq")).toAggregateExpression(), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_by_score", exprs => TopKByScore(exprs(0), exprs(1),
-        intArg(exprs(2), "topk_by_score")).toAggregateExpression(), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles", exprs => WordShingles(exprs(0),
-        intArg(exprs(1), "word_shingles")), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_ngrams", exprs => CharNgrams(exprs(0),
-        intArg(exprs(1), "char_ngrams")), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_sig", exprs => SimHashSignature(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "oph_minhash_sig", exprs => OphMinHash(exprs(0),
-        intArg(exprs(1), "oph_minhash_sig")), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bottomk_sample", exprs => BottomKSample(exprs(0), exprs(1),
-        intArg(exprs(2), "bottomk_sample")).toAggregateExpression(), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_min_hashes", exprs => KmvMinHashes(exprs(0),
-        intArg(exprs(1), "kmv_min_hashes")).toAggregateExpression(), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_low60", exprs => Md5Low60(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_minhash_sig", exprs => Md5MinHashSig(exprs(0),
-        intArg(exprs(1), "md5_minhash_sig")), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_simhash_sig", exprs => Md5SimHashSig(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pair_ids", exprs => PairExpandIds(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pair_sized", exprs => PairExpandSized(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "payload_windows", exprs => PayloadWindows(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_xxhash64", exprs => SortedXxHash64Set(exprs(0)), "scala_udf")
+        org.apache.spark.sql.catalyst.FunctionIdentifier(sqlFunctions.head._1))) return
+    sqlFunctions.foreach { case (name, _, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 }

@@ -13,14 +13,14 @@ import graft.{QueryDef, Tables}
   *
   *  - exact dedup: one shuffle on the content digest; the window keeps
   *    the lowest doc_id per group (deterministic survivor).
-  *  - MinHash: signatures are 64 per-seed `min(xxhash64(shingle, seed))`
-  *    aggregates computed in ONE map-side-combinable pass over the
-  *    exploded shingles; LSH banding turns the O(n²) pair search into an
-  *    equi-join on (band, bandHash) — the only quadratic work left is
+  *  - MinHash: 64 portable md5-family minima per document, computed
+  *    per row in one pass; LSH banding turns the O(n²) pair search into
+  *    a grouping on (band, band key) — the only quadratic work left is
   *    within-bucket, and the exact-Jaccard verify runs only on surviving
   *    candidate pairs.
-  *  - SimHash: 64 per-bit majority sums in one aggregation pass; 4×16-bit
-  *    bands guarantee (pigeonhole) recall for Hamming distance <= 3.
+  *  - SimHash: 60 per-bit majority sums over md5 token hashes, per row;
+  *    4×15-bit bands guarantee (pigeonhole) recall for Hamming distance
+  *    <= 3.
   *  - embedding near-dup: 16-bit random-hyperplane signature bucketing,
   *    then exact cosine only within buckets.
   *
@@ -66,10 +66,8 @@ object DedupOps {
     * [[graft.functions.Md5Low60]] kernel (thread-local MessageDigest,
     * no hex round-trip — the builtin `conv(substring(md5(...)))`
     * composition is ~50× slower per hash; PortableMd5Spec pins their
-    * bit-parity). The xxhash64-based native expressions (`OphMinHash`,
-    * `BottomKByHash`, `SimHashSignature`) remain the fastest
-    * single-engine tier — this family is the CROSS-ENGINE-CHECKABLE
-    * tier of the same algorithms. */
+    * bit-parity). It is the only near-duplicate sketch hash family, so
+    * every sketch pipeline stays oracle-checkable. */
   private[ops] def portableHash60(c: Column): Column =
     graft.functions.GraftFunctions.md5_low60(c)
 
@@ -174,10 +172,8 @@ object DedupOps {
     // MinHash+LSH with the portable md5 hash family: the ENTIRE
     // pipeline — KM double-hashing signatures, band keys, bucket cap, candidate
     // pairs, exact verify — is re-derived by the oracle, so the sketch
-    // is bit-checked end to end (r6 verdict task 1; the xxhash-native
-    // production path keeps its floors in SKETCH_QUALITY under
-    // dd02_native_oph). The sh CTE is dd06's proven word_shingles
-    // re-derivation.
+    // is bit-checked end to end (r6 verdict task 1). The sh CTE is
+    // dd06's proven word_shingles re-derivation.
     QueryDef(
       "dd02_minhash_lsh",
       Some("""WITH u AS (
@@ -230,8 +226,7 @@ object DedupOps {
     // Hamming gate is opened to <=5 for candidate recall (0.98) and
     // precision comes from the exact verify (1.0 by construction).
     // Portable md5 fingerprints since r7, so the whole pipeline is
-    // oracle-checked (the xxhash native keeps its floors in
-    // SKETCH_QUALITY under dd03_native_simhash).
+    // oracle-checked.
     QueryDef(
       "dd03_simhash",
       Some("""WITH u AS (
@@ -281,9 +276,7 @@ object DedupOps {
     // pair must share >= least(5, nka, nkb) keys before the exact
     // verify — the gate adapts to tiny documents so exact-duplicate
     // recall stays total. The oracle re-derives keys, posting lists,
-    // gates and verified pairs bit-for-bit (r6 verdict task 1; the
-    // bottomk_by_hash native keeps its floors in SKETCH_QUALITY under
-    // dd04_native_bottomk).
+    // gates and verified pairs bit-for-bit (r6 verdict task 1).
     QueryDef(
       "dd04_ngram_jaccard",
       Some("""WITH u AS (
@@ -1634,67 +1627,11 @@ object DedupOps {
     labels
   }
 
-  /** MinHash+LSH near-duplicate pairs with an exact-Jaccard verify step.
-    * Output: (a, b, jaccard) for candidate pairs whose true shingle-set
-    * Jaccard >= threshold. */
-  /** (doc_id, band, bh) LSH band hashes for every document — the
-    * shared banding pass behind [[minHashNearDups]] and the persisted
-    * index ([[writeLshIndex]]/[[probeLshIndex]]). Map-side only: one
-    * OPH signature per row, one xxhash64 per band. */
-  def bandHashes(corpus: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rowsPerBand = numHashes / bands
-    val sig = shingleSets(corpus)
-      .select(col("doc_id"),
-        graft.functions.GraftFunctions.oph_minhash_sig(col("shs"), numHashes).as("mh"))
-      .select(col("doc_id") +:
-        (0 until numHashes).map(i => element_at(col("mh"), i + 1).as(s"h$i")): _*)
-    val bandCols = (0 until bands).map { b =>
-      xxhash64(((b * rowsPerBand) until ((b + 1) * rowsPerBand)).map(i => col(s"h$i")): _*)
-    }
-    sig.select(col("doc_id"), posexplode(array(bandCols: _*)))
-      .toDF("doc_id", "band", "bh")
-  }
-
-  /** Persist the LSH posting layout: (band, bucket-group) partitioned
-    * parquet of (bh, doc_id). The bucket-group (bh mod 64) bounds how
-    * much of the index a probe must read: an incoming batch touches
-    * only its own (band, bg) directories — the MinHash analog of
-    * [[VectorOps.writeIvfIndex]]'s cell partitioning. At 100 TB the
-    * index holds 8 longs per doc and the daily near-dup check reads
-    * O(batch) partitions, never the corpus. */
-  def writeLshIndex(corpus: DataFrame, path: String,
-      numHashes: Int = 64, bands: Int = 8): Unit =
-    bandHashes(corpus, numHashes, bands)
-      .withColumn("bg", pmod(col("bh"), lit(64L)))
-      .write.partitionBy("band", "bg").mode("overwrite").parquet(path)
-
-  /** Probe the persisted LSH index with a new batch: candidates are
-    * (corpus_id, batch_id) pairs sharing any exact band hash. The scan
-    * filters on BOTH partition columns (directory pruning) before the
-    * equi-join on the band hash itself. */
-  def probeLshIndex(spark: SparkSession, path: String, batch: DataFrame,
-      numHashes: Int = 64, bands: Int = 8): DataFrame = {
-    val probes = bandHashes(batch, numHashes, bands)
-      .withColumn("bg", pmod(col("bh"), lit(64L)))
-    // bounded collect: <= bands x 64 distinct (band, group) keys
-    val touched = probes.select("band", "bg").distinct().collect()
-    val bandsTouched = touched.map(_.getInt(0)).distinct.toSeq
-    val groupsTouched = touched.map(_.getLong(1)).distinct.toSeq
-    spark.read.parquet(path)
-      .filter(col("band").isin(bandsTouched: _*) &&
-        col("bg").isin(groupsTouched: _*))
-      .select(col("doc_id").as("corpus_id"), col("band"), col("bg"), col("bh"))
-      .join(probes.select(col("doc_id").as("batch_id"), col("band"),
-        col("bg"), col("bh")), Seq("band", "bg", "bh"))
-      .select("corpus_id", "batch_id").distinct()
-  }
-
   /** Per-doc LSH band keys over the PORTABLE KM double-hashing
     * MinHash family: one row per (doc, band), `bk` = the band's
     * `rowsPerBand` raw signature minima as a struct of longs (fields
-    * `k1..kN` — the portable analog of the native path's xxhash64
-    * band hash, which the oracle could not reproduce; fixed-width
+    * `k1..kN` — raw minima rather than a hash of them, so the oracle
+    * groups on the same values; fixed-width
     * 8·rowsPerBand-byte shuffle keys instead of the ~80-char decimal
     * concat string a first cut used, and the oracle groups on the
     * same values as plain columns). Shared by the one-shot
@@ -1743,20 +1680,17 @@ object DedupOps {
     * hash family: 64 KM double-hashing 57-bit hashes (one digest per
     * shingle — [[graft.functions.PortableMd5]]), per-doc minima, 16
     * bands × 4 rows, in-bucket pair generation, exact-Jaccard verify.
-    * Same pipeline shape as [[minHashNearDups]] (the xxhash64/OPH
-    * production path) but every intermediate value is reproducible in
-    * ANY engine with md5 — the DuckDB oracle re-derives signatures,
-    * band keys, candidate sets and verified pairs bit-for-bit (r6
-    * verdict task 1).
+    * Every intermediate value is reproducible in ANY engine with md5 —
+    * the DuckDB oracle re-derives signatures, band keys, candidate
+    * sets and verified pairs bit-for-bit (r6 verdict task 1).
     *
     * Scale shape: signatures are per-ROW — one
     * [[graft.functions.Md5MinHashSig]] call over the shingle array
     * (no explode, no signature shuffle); band keys are a map-only
-    * projection, and the bucket stage is the same groupBy + in-bucket
-    * `pair_ids` as the native path (no posting self-join). Buckets
-    * >100 docs are degenerate collisions and are skipped — a
-    * documented recall knob, not a correctness one (the oracle
-    * applies the same cap). */
+    * projection, and the bucket stage is a groupBy + in-bucket
+    * `pair_ids` (no posting self-join). Buckets >100 docs are
+    * degenerate collisions and are skipped — a documented recall
+    * knob, not a correctness one (the oracle applies the same cap). */
   def minHashNearDupsPortable(corpus: DataFrame, bands: Int = 16,
       rowsPerBand: Int = 4, threshold: Double = 0.8): DataFrame = {
     val numHashes = bands * rowsPerBand
@@ -1821,12 +1755,9 @@ object DedupOps {
     * zero-index-Exchange plan). Rebuild cadence is the same as any
     * LSH index: append-heavy lakes re-bucket when bucket skew drifts.
     *
-    * Relation to the native [[writeLshIndex]]/[[probeLshIndex]] pair:
-    * that one is the cheapest candidate SCREEN (xxhash band hashes,
-    * (band, bg)-pruned directory layout, candidates only); this one is
-    * the full incremental dd02 — portable hashes, per-bucket posting
-    * lists with the combined cap, and the exact-Jaccard verify — whose
-    * end result the DuckDB oracle replays. */
+    * This is the full incremental dd02 — portable hashes, per-bucket
+    * posting lists with the combined cap, and the exact-Jaccard
+    * verify — whose end result the DuckDB oracle replays. */
   def writePortableLshIndex(lake: DataFrame, table: String, path: String,
       bands: Int = 16, rowsPerBand: Int = 4): Unit =
     graft.core.PhaseTimer.phase("build") {
@@ -2200,12 +2131,11 @@ object DedupOps {
   }
 
   /** dd04's bottom-k inverted-index near-dup with the PORTABLE hash
-    * ([[portableHash60]]) in place of the native `bottomk_by_hash`
-    * sketch: each doc posts its 12 smallest-by-md5 shingle hashes,
-    * posting lists of 2..50 docs generate candidates, a pair must
-    * share >= least(5, nka, nkb) keys, then the exact-Jaccard verify.
-    * Identical scale guards and shuffle count as the native dd04 body;
-    * the bottom-k here is `slice(sort_array(transform(...)), 1, k)` —
+    * ([[portableHash60]]): each doc posts its 12 smallest-by-md5
+    * shingle hashes, posting lists of 2..50 docs generate candidates,
+    * a pair must share >= least(5, nka, nkb) keys, then the
+    * exact-Jaccard verify.
+    * The bottom-k here is `slice(sort_array(transform(...)), 1, k)` —
     * an O(n log n) per-doc array sort on ~doc-length arrays, which the
     * oracle reproduces with `list_slice(list_sort(list_transform))`. */
   def bottomKNearDupsPortable(corpus: DataFrame, k: Int = 12,
@@ -2267,62 +2197,6 @@ object DedupOps {
       tier(7).as("n_ge_07"), tier(9).as("n_ge_09"))
   }
 
-  /** Native bottom-k inverted-index near-dup (the xxhash64
-    * `bottomk_by_hash` sketch): dd04's production path — identical
-    * pipeline to [[bottomKNearDupsPortable]] but with the one-pass
-    * native expression computing the per-doc key sketch. */
-  def bottomKNearDups(corpus: DataFrame, k: Int = 12,
-      threshold: Double = 0.8): DataFrame = {
-    val sets = shingleSets(corpus)
-    val keyed = sets.select(col("doc_id"),
-      explode(graft.functions.GraftFunctions.bottomk_by_hash(col("shs"), k)).as("sh"))
-    // One shuffle builds the posting lists; pairs are generated
-    // inside each list with HOFs (i<j combinations) instead of a
-    // posting self-join — no second/third shuffle of the postings.
-    val posts = keyed.groupBy("sh").agg(sort_array(collect_set(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")).between(2, 50))
-    val keyCounts = keyed.groupBy("doc_id").agg(count(lit(1)).as("nk"))
-    val cand = posts
-      .select(graft.functions.GraftFunctions.pair_ids(col("ids")))
-      .groupBy("a", "b").agg(count(lit(1)).as("n_keys_common"))
-      .join(keyCounts.select(col("doc_id").as("a"), col("nk").as("nka")), "a")
-      .join(keyCounts.select(col("doc_id").as("b"), col("nk").as("nkb")), "b")
-      .filter(col("n_keys_common") >= least(lit(5), col("nka"), col("nkb")))
-      .select("a", "b")
-    verifyJaccard(cand, sets, threshold)
-  }
-
-  /** The three NATIVE (xxhash) sketch tiers on the same injected-dup
-    * corpus and exact verify as the registered md5-portable queries —
-    * production paths whose hashes no external engine can reproduce,
-    * so their quality lives in SKETCH_QUALITY floors instead of the
-    * oracle gate (r7: the registered dd02/dd03/dd04 moved to the
-    * portable family and became oracle-exact). */
-  def nativeSketchTiers(s: SparkSession, d: String): Seq[(String, DataFrame)] = {
-    val u = dupDocs(s, d)
-    val sets = shingleSets(u)
-    Seq(
-      "dd02_native_oph" -> minHashNearDups(u, numHashes = 64, bands = 16, threshold = 0.8),
-      "dd03_native_simhash" -> verifyJaccard(
-        simHashNearDups(u, maxHamming = 5).select("a", "b"), sets, threshold = 0.8),
-      "dd04_native_bottomk" -> bottomKNearDups(u))
-  }
-
-  def minHashNearDups(corpus: DataFrame, numHashes: Int, bands: Int, threshold: Double): DataFrame = {
-    val banded = bandHashes(corpus, numHashes, bands)
-    // Pairs generated inside each LSH bucket (one groupBy shuffle, no
-    // posting self-join). Buckets >100 docs are degenerate collisions
-    // and are skipped — a documented recall knob, not a correctness one.
-    val buckets = banded.groupBy("band", "bh")
-      .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")).between(2, 100))
-    val cand = buckets
-      .select(graft.functions.GraftFunctions.pair_ids(col("ids")))
-      .distinct()
-
-    verifyJaccard(cand, shingleSets(corpus), threshold)
-  }
-
   /** Exact shingle-set Jaccard for candidate (a, b) pairs, computed on
     * compact per-doc shingle arrays — one row per pair (array_intersect
     * / array_union), never a per-shingle re-explosion. Two EMPTY sets
@@ -2367,10 +2241,9 @@ object DedupOps {
     * 60-bit fingerprints — sign bits of the 60 per-bit ±1 majority
     * sums over the doc's token-bag md5 hashes — banded into 4×15 bits
     * (pigeonhole: any pair within Hamming distance <= 3 shares a
-    * band), candidates gated at Hamming <= `maxHamming`. Same
-    * two-stage discipline as the native [[simHashNearDups]] (the
-    * r4-calibrated Hamming <= 5 gate + exact-Jaccard verify), but
-    * every fingerprint bit is reproducible in any engine with md5, so
+    * band), candidates gated at Hamming <= `maxHamming` (the
+    * r4-calibrated Hamming <= 5 gate), then the exact-Jaccard verify.
+    * Every fingerprint bit is reproducible in any engine with md5, so
     * the DuckDB oracle re-derives signatures, bands, candidates and
     * verified pairs bit-for-bit (r6 verdict task 8 — this leaves only
     * the genuinely engine-internal sketches, q18 HLL and ev14 GK,
@@ -2380,7 +2253,7 @@ object DedupOps {
     * [[graft.functions.Md5SimHashSig]] call over the token bag (one
     * md5 per token, 60·|tokens| bit ops in a primitive loop), no
     * explode and no shuffle; the only shuffles are the band-bucket
-    * join and the verify joins, exactly the native path's shape.
+    * join and the verify joins.
     * Returns verified (a, b, jaccard). */
   def simHashNearDupsPortable(corpus: DataFrame, maxHamming: Int = 5,
       threshold: Double = 0.8): DataFrame = {
@@ -2402,29 +2275,5 @@ object DedupOps {
         bit_count(col("sima").bitwiseXOR(col("simb"))) <= maxHamming)
       .select("a", "b").distinct()
     verifyJaccard(cand, shingleSets(corpus), threshold)
-  }
-
-  /** SimHash near-duplicate pairs: 64-bit fingerprints from token-hash
-    * bit majorities; banded into 4×16 bits so any pair within Hamming
-    * distance <= 3 shares at least one exact band (pigeonhole). Output:
-    * (a, b, hamming). */
-  def simHashNearDups(corpus: DataFrame, maxHamming: Int): DataFrame = {
-    // Per-row signature via the native expression — no explode, no
-    // 64-aggregate shuffle (see graft.functions.SimHashSignature).
-    val sig = corpus.select(col("doc_id"),
-      graft.functions.GraftFunctions.simhash_sig(split(col("text"), " ")).as("sim"))
-
-    val bandCols = (0 until 4).map(b =>
-      shiftrightunsigned(col("sim"), b * 16).bitwiseAND(lit(0xFFFFL)))
-    val banded = sig.select(col("doc_id"), col("sim"), posexplode(array(bandCols: _*)))
-      .toDF("doc_id", "sim", "band", "bv")
-    banded.select(col("doc_id").as("a"), col("sim").as("sima"), col("band"), col("bv"))
-      .join(banded.select(col("doc_id").as("b"), col("sim").as("simb"), col("band"), col("bv")),
-        Seq("band", "bv"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        bit_count(col("sima").bitwiseXOR(col("simb"))).cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
   }
 }

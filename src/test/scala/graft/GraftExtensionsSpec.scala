@@ -14,11 +14,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
   // register-only, so a cluster configured with the extension could
   // not resolve functions five registered queries depend on)
   private val expected = Seq("cosine_sim", "dot_product", "minhash_sig",
-    "bottomk_by_hash", "word_shingles", "char_ngrams", "simhash_sig",
-    "oph_minhash_sig", "heavy_hitters", "topk_freq", "topk_by_score",
-    "sorted_intersect_count", "md5_low60", "md5_minhash_sig",
-    "md5_simhash_sig", "kmv_min_hashes", "bottomk_sample",
-    "pair_ids", "pair_sized")
+    "word_shingles", "char_ngrams", "heavy_hitters", "topk_freq",
+    "topk_by_score", "sorted_intersect_count", "md5_low60",
+    "md5_minhash_sig", "md5_simhash_sig", "kmv_min_hashes",
+    "bottomk_sample", "pair_ids", "pair_sized", "payload_windows",
+    "sorted_xxhash64")
 
   test("injectFunction wires the full native-function surface into a registry") {
     val got = Bridge.extensionFunctionNames(new GraftExtensions, expected)
@@ -37,5 +37,16 @@ class GraftExtensionsSpec extends AnyFunSuite {
       "SELECT round(cosine_sim(array(1.0d, 2.0d), array(2.0d, 4.0d)), 6) AS c")
       .head.getDouble(0)
     assert(r == 1.0)
+  }
+
+  test("register creates a temp function for every table entry, each name once") {
+    val names = graft.functions.GraftFunctions.sqlFunctions.map(_._1)
+    assert(names.distinct == names, s"listed twice: ${names.diff(names.distinct)}")
+    assert(names.sorted == expected.sorted)
+    val spark = TestSpark.spark
+    graft.functions.GraftFunctions.register(spark)
+    val missing = names.filterNot(n => spark.sessionState.functionRegistry
+      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"not registered: ${missing.mkString(", ")}")
   }
 }

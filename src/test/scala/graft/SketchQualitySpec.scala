@@ -6,10 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * artifact advertises — same computation
   * ([[SketchQuality.metrics]]), so the artifact can't drift from what
   * the suite guarantees. Since r7 the registered dd02/dd03/dd04 are
-  * md5-portable and oracle-exact; the floors here cover BOTH those
-  * (algorithmic recall of the candidate stages) and the xxhash native
-  * production tiers (dd0X_native_*), which no external oracle can
-  * reproduce. */
+  * md5-portable and oracle-exact; the floors here cover the
+  * algorithmic recall of their candidate stages. */
 class SketchQualitySpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -23,20 +21,16 @@ class SketchQualitySpec extends AnyFunSuite {
     // stage (dd03 since the r5 calibration — no pure Hamming threshold
     // cleared p>=0.97 at r>=0.95), so false pairs are structurally
     // impossible: precision must be EXACTLY 1.0, not approximately.
-    for (name <- Seq("dd02_minhash_lsh", "dd03_simhash", "dd04_ngram_jaccard",
-        "dd02_native_oph", "dd03_native_simhash", "dd04_native_bottomk")) {
+    for (name <- Seq("dd02_minhash_lsh", "dd03_simhash", "dd04_ngram_jaccard")) {
       val p = m(name)("precision_vs_dd06")
       val r = m(name)("recall_vs_dd06")
       assert(p == 1.0, s"$name precision $p (verify stage admitted a false pair)")
       assert(r >= 0.95, s"$name recall $r")
       assert(m(name)("n_pairs") > 0, name)
     }
-    // dd02/dd04 candidate generation is recall-total on this corpus,
-    // in both the md5-portable registered and xxhash native tiers
+    // dd02/dd04 candidate generation is recall-total on this corpus
     assert(m("dd02_minhash_lsh")("recall_vs_dd06") == 1.0)
     assert(m("dd04_ngram_jaccard")("recall_vs_dd06") == 1.0)
-    assert(m("dd02_native_oph")("recall_vs_dd06") == 1.0)
-    assert(m("dd04_native_bottomk")("recall_vs_dd06") == 1.0)
   }
 
   test("vs10 nprobe->recall curve: monotone non-decreasing, exact at full probe") {

@@ -158,6 +158,25 @@ class MergeSpec extends AnyFunSuite {
     assert(!new java.io.File(merged, "same.csv").exists())
   }
 
+  test("runAll: a batch whose output name an earlier batch used fails instead of overwriting") {
+    writeSingle(Seq((1L, "a")).toDF("id", "t"), s"$root/dup/x/sales_2023.parquet")
+    writeSingle(Seq((2L, "b")).toDF("id", "t"), s"$root/dup/y/sales_2023.parquet")
+    writeSingle(Seq((3L, "c")).toDF("id", "t"), s"$root/dup/x/sales_2024.parquet")
+    writeSingle(Seq((4L, "d")).toDF("id", "t"), s"$root/dup/y/sales_2024.parquet")
+    val files = Discovery.scanFolders(spark, Seq(s"$root/dup/x", s"$root/dup/y"))
+    val (groups, _) = Discovery.smartBatch(files)
+    val jobs = groups.zipWithIndex.map { case ((_, fs), i) => MergeJobs.buildJob(spark, fs, i + 1) }
+    // trailing digits are stripped from batch names: both are "sales"
+    assert(jobs.map(_.name) == Seq("sales", "sales"))
+    val (outcomes, remaining) = MergeJobs.runAll(spark, jobs, s"$root/dup/out")
+    val dest = s"$root/dup/out/merged/sales.parquet"
+    assert(outcomes.head.isRight)
+    assert(outcomes(1) == Left((jobs(1), s"Output name already used in this run: $dest")))
+    assert(remaining == Seq(jobs(1)))
+    // the first (sales_2023) batch's rows are intact
+    assert(spark.read.parquet(dest).select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+  }
+
   test("writeSingleFile: failed write leaves no staging/tmp litter and keeps prior output") {
     val dest = s"$root/cleanup/out.parquet"
     writeSingle(Seq((1L, "keep")).toDF("id", "t"), dest)

@@ -44,9 +44,6 @@ class MinHashSignatureSpec extends AnyFunSuite {
     val viaBigint = spark.sql("SELECT minhash_sig(array('x','y'), CAST(8 AS BIGINT)) AS s")
       .head.getSeq[Long](0)
     assert(viaBigint == viaSql)
-    // bottomk_by_hash is registered too
-    val bk = spark.sql("SELECT bottomk_by_hash(array('p','q','r'), 2) AS s").head.getSeq[String](0)
-    assert(bk.size == 2)
   }
 
   test("similar sets agree on most signature positions (MinHash property)") {
