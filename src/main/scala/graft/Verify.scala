@@ -6,10 +6,14 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: regex over query names (local iteration only —
-    // the dumped registry still lists everything, so check.py treats a
-    // filtered run's missing dirs as failures; use for spot checks)
-    val filter = args.lift(2).map(_.r)
+    // optional 3rd arg: regex over query names, for spot checks; the
+    // listing below then names only the queries this run attempted.
+    // sbt's runMain passes single quotes through, so `'^st'` is `^st`.
+    val filter = args.lift(2).map(_.stripPrefix("'").stripSuffix("'").r)
+    val selected = SparkEntry.queries
+      .filter { case (name, _) => filter.forall(_.findFirstIn(name).isDefined) }
+    // an empty selection would write an empty listing that checks clean
+    require(selected.nonEmpty, s"no registered query matches ${filter.mkString}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -21,9 +25,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => filter.forall(_.findFirstIn(name).isDefined) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -45,11 +47,11 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // full registry listing so checkers can flag queries that failed to
-    // produce output (a missing dir must read as FAIL, not absence)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .map(q).mkString("[", ",", "]")
-    Files.writeString(Paths.get(s"$outDir/query_names.json"), names)
+    // listing of every attempted query (the whole registry unless
+    // filtered) so checkers can flag queries that failed to produce
+    // output (a missing dir must read as FAIL, not absence)
+    Files.writeString(Paths.get(s"$outDir/query_names.json"),
+      selected.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
     spark.stop()
   }
 }

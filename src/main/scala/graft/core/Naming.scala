@@ -45,13 +45,19 @@ object Naming {
 
   private def isAsciiDigit(c: Char): Boolean = c >= '0' && c <= '9'
 
-  /** Batch-name ladder (main.rs:440-480): single name -> itself; else
-    * cleaned common prefix (>= 3 chars before AND after trimming trailing
-    * `_`/`-`/digits) -> cleaned common suffix -> common substring ->
-    * "batch_N". */
+  /** Batch-name ladder (main.rs:440-480): a single name, or names that
+    * are all the same, -> that name; else cleaned common prefix (>= 3
+    * chars before AND after trimming trailing `_`/`-`/digits) -> cleaned
+    * common suffix -> common substring -> "batch_N".
+    *
+    * The all-same rule keeps a smart batch's file stem, as the reference
+    * names it (main.rs:272-275): `sales_2023.parquet` x2 is `sales_2023`,
+    * where the prefix rule would strip the digits and give `sales_2024`
+    * x2 the same name. A manual batch of identically named files keeps
+    * its stem too. */
   def generateBatchName(fileNames: Seq[String], batchNumber: Int): String = {
     if (fileNames.isEmpty) return s"batch_$batchNumber"
-    if (fileNames.size == 1) return fileNames.head
+    if (fileNames.distinct.size == 1) return fileNames.head
 
     val prefix = commonPrefix(fileNames)
     if (prefix.length >= 3) {

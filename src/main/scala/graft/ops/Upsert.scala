@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionConf.withConf
+
 /** Keyed upsert (MERGE INTO) over a bucket-partitioned parquet table —
   * the incremental-update primitive of a mutable 100 TB lake, built on
   * plain parquet + Spark primitives (no table-format dependency).
@@ -56,13 +58,8 @@ object Upsert {
       batch.select(col(keyCol)).hint("broadcast"), Seq(keyCol), "left_anti")
     val merged = survivors.unionByName(batch)
 
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
+    withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       merged.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
     affected.length
   }

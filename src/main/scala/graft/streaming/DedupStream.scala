@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.DedupOps
@@ -77,8 +77,6 @@ object DedupStream {
     * `indexDir`; the raw docs under `docsDir` (the verify stage's
     * text store — a real lake already has one).
     *
-    * @param processAll `true` = drain what exists then stop
-    *                   (Trigger.AvailableNow); `false` = keep running
     * @param filesPerTrigger ingest granularity — results do NOT depend
     *                   on it (slicing invariance above)
     */
@@ -92,41 +90,28 @@ object DedupStream {
       checkpointDir: String,
       threshold: Double = 0.8,
       filesPerTrigger: Int = 1,
-      processAll: Boolean = true,
-      blockKeys: Option[DataFrame] = None): StreamingQuery = {
-    val trigger =
-      if (processAll) Trigger.AvailableNow() else Trigger.ProcessingTime("10 seconds")
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val b = batch.select("doc_id", "text")
-        // commit the batch's text and postings FIRST, then probe off
-        // the written shard: the signature pass (the CPU-dominant
-        // stage) executes exactly once per batch, and the probe reads
-        // it back as 8-byte key columns. Splitting the store read on
-        // the batch id keeps the just-committed shard out of the index
-        // side, so same-batch pairs aren't double-counted.
-        batch.write.mode("overwrite").parquet(s"$docsDir/batch=$id")
-        DedupOps.lshBandIndex(b).write.mode("overwrite")
-          .parquet(s"$indexDir/batch=$id")
-        val store = spark.read.parquet(indexDir)
-        // verify reads candidate docs' text from the store (which now
-        // includes this batch); the probe semi-join-prunes it to
-        // candidate ids BEFORE shingling, so per-batch verify CPU is
-        // O(candidates), never O(store)
-        val texts = readStore(spark, docsDir, b)
-        val pairs = DedupOps.lshShardedProbeKeys(
-          store.filter(col("batch") === id).drop("batch"),
-          store.filter(col("batch") =!= id).drop("batch"),
-          texts, threshold = threshold, blockKeys = blockKeys)
-        pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$id")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
+      blockKeys: Option[DataFrame] = None): StreamingQuery =
+    fileBatches(spark, inDir, schema, checkpointDir, filesPerTrigger) { (batch, id) =>
+      val b = batch.select("doc_id", "text")
+      // commit the batch's text and postings FIRST, then probe off
+      // the written shard: the signature pass (the CPU-dominant
+      // stage) executes exactly once per batch, and the probe reads
+      // it back as 8-byte key columns. Splitting the store read on
+      // the batch id keeps the just-committed shard out of the index
+      // side, so same-batch pairs aren't double-counted.
+      batch.write.mode("overwrite").parquet(s"$docsDir/batch=$id")
+      DedupOps.lshBandIndex(b).write.mode("overwrite")
+        .parquet(s"$indexDir/batch=$id")
+      val store = spark.read.parquet(indexDir)
+      // verify reads candidate docs' text from the store (which now
+      // includes this batch); the probe semi-join-prunes it to
+      // candidate ids BEFORE shingling, so per-batch verify CPU is
+      // O(candidates), never O(store)
+      val texts = readStore(spark, docsDir, b)
+      val pairs = DedupOps.lshShardedProbeKeys(
+        store.filter(col("batch") === id).drop("batch"),
+        store.filter(col("batch") =!= id).drop("batch"),
+        texts, threshold = threshold, blockKeys = blockKeys)
+      pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$id")
+    }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.MultimodalOps
@@ -43,8 +43,6 @@ object MediaStream {
     * `inDir` (schema: `doc_id` long + `payload` binary). Posting
     * shards accumulate under `indexDir/batch=<id>`.
     *
-    * @param processAll `true` = drain what exists then stop
-    *                   (Trigger.AvailableNow); `false` = keep running
     * @param filesPerTrigger ingest granularity — the accumulated index
     *                   does NOT depend on it (slicing invariance above)
     */
@@ -54,25 +52,14 @@ object MediaStream {
       schema: StructType,
       indexDir: String,
       checkpointDir: String,
-      filesPerTrigger: Int = 1,
-      processAll: Boolean = true): StreamingQuery = {
-    val trigger =
-      if (processAll) Trigger.AvailableNow()
-      else Trigger.ProcessingTime("10 seconds")
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        MultimodalOps.payloadLshIndex(batch.select("doc_id", "payload"))
-          .write.mode("overwrite").parquet(s"$indexDir/batch=$id")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
+      filesPerTrigger: Int = 1): StreamingQuery =
+    fileBatches(spark, inDir, schema, checkpointDir, filesPerTrigger)(
+      indexShard(indexDir))
+
+  /** One micro-batch's posting shard, written over `batch=<id>`. */
+  private def indexShard(indexDir: String)(batch: DataFrame, id: Long): Unit =
+    MultimodalOps.payloadLshIndex(batch.select("doc_id", "payload"))
+      .write.mode("overwrite").parquet(s"$indexDir/batch=$id")
 
   /** [[payloadIngest]] with a RETENTION WINDOW — the TTL'd media
     * index service (st17/st18's verb on the fourth family): after each
@@ -94,21 +81,11 @@ object MediaStream {
       checkpointDir: String,
       keepBatches: Int,
       filesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        MultimodalOps.payloadLshIndex(batch.select("doc_id", "payload"))
-          .write.mode("overwrite").parquet(s"$indexDir/batch=$id")
-        graft.ops.DedupOps.expireShards(spark, indexDir, "batch",
-          id - keepBatches + 1)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    fileBatches(spark, inDir, schema, checkpointDir, filesPerTrigger) { (batch, id) =>
+      indexShard(indexDir)(batch, id)
+      graft.ops.DedupOps.expireShards(spark, indexDir, "batch",
+        id - keepBatches + 1)
+    }
 
   /** Consolidate an ingest's append-only shard store back into the
     * one-row-per-band-key posting layout: a pure regroup — shards hold

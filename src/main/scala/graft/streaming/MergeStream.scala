@@ -25,25 +25,21 @@ import graft.ops.Upsert
   */
 object MergeStream {
 
-  /** Start a continuous merge of `inDir` into `outDir`.
+  /** Merge into `outDir` every file of `inDir` this checkpoint has not
+    * yet seen, then stop (`Trigger.AvailableNow`); re-invoke to pick up
+    * later arrivals.
     *
     * @param schema     fixed source schema — probe one input with
     *                   [[Merge.probeSchema]] (file sources need the
     *                   schema up front; drifting files surface as nulls
     *                   or read errors rather than silent column loss)
-    * @param processAll `true` = drain what exists then stop
-    *                   (Trigger.AvailableNow — batch-like invocation);
-    *                   `false` = keep running on new arrivals
     */
   def continuousMerge(
       spark: SparkSession,
       inDir: String,
       outDir: String,
       checkpointDir: String,
-      schema: StructType,
-      processAll: Boolean = true): StreamingQuery = {
-    val trigger =
-      if (processAll) Trigger.AvailableNow() else Trigger.ProcessingTime("10 seconds")
+      schema: StructType): StreamingQuery =
     spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1000)
@@ -52,9 +48,8 @@ object MergeStream {
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .start()
-  }
 
   /** Continuous keyed upsert: watch `inDir` for change files and MERGE
     * each micro-batch into the bucket-partitioned table at `tablePath`
@@ -74,10 +69,7 @@ object MergeStream {
       keyCol: String,
       versionCol: String,
       nBuckets: Int,
-      checkpointDir: String,
-      processAll: Boolean = true): StreamingQuery = {
-    val trigger =
-      if (processAll) Trigger.AvailableNow() else Trigger.ProcessingTime("10 seconds")
+      checkpointDir: String): StreamingQuery =
     spark.readStream
       .schema(schema)
       .parquet(inDir)
@@ -92,7 +84,6 @@ object MergeStream {
         ()
       }
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .start()
-  }
 }

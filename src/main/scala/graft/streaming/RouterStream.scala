@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.TextOps
@@ -49,34 +49,20 @@ object RouterStream {
       acceptDir: String,
       quarantineDir: String,
       checkpointDir: String,
-      filesPerTrigger: Int = 1,
-      processAll: Boolean = true): StreamingQuery = {
-    val trigger =
-      if (processAll) Trigger.AvailableNow()
-      else Trigger.ProcessingTime("10 seconds")
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // evaluate the gate ONCE per row, route on the flag; the two
-        // filtered writes share the gated frame's plan. A NULL gate
-        // (e.g. NULL text under gopherKeep) fails BOTH filter(k) and
-        // filter(!k) — coalesce to false so such rows land in
-        // quarantine and the two stores stay an exact partition of
-        // the input (ADVICE r8)
-        val gated = batch.withColumn("__keep__", coalesce(gate, lit(false)))
-        gated.filter(col("__keep__")).drop("__keep__")
-          .write.mode("overwrite").parquet(s"$acceptDir/batch=$id")
-        gated.filter(!col("__keep__")).drop("__keep__")
-          .write.mode("overwrite").parquet(s"$quarantineDir/batch=$id")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
+      filesPerTrigger: Int = 1): StreamingQuery =
+    fileBatches(spark, inDir, schema, checkpointDir, filesPerTrigger) { (batch, id) =>
+      // evaluate the gate ONCE per row, route on the flag; the two
+      // filtered writes share the gated frame's plan. A NULL gate
+      // (e.g. NULL text under gopherKeep) fails BOTH filter(k) and
+      // filter(!k) — coalesce to false so such rows land in
+      // quarantine and the two stores stay an exact partition of
+      // the input (ADVICE r8)
+      val gated = batch.withColumn("__keep__", coalesce(gate, lit(false)))
+      gated.filter(col("__keep__")).drop("__keep__")
+        .write.mode("overwrite").parquet(s"$acceptDir/batch=$id")
+      gated.filter(!col("__keep__")).drop("__keep__")
+        .write.mode("overwrite").parquet(s"$quarantineDir/batch=$id")
+    }
 
   /** The Gopher-gate router (st14): [[predicateRoute]] with
     * [[TextOps.gopherKeep]] — the literally same predicate the batch
@@ -88,8 +74,7 @@ object RouterStream {
       acceptDir: String,
       quarantineDir: String,
       checkpointDir: String,
-      filesPerTrigger: Int = 1,
-      processAll: Boolean = true): StreamingQuery =
+      filesPerTrigger: Int = 1): StreamingQuery =
     predicateRoute(spark, inDir, schema, TextOps.gopherKeep(col("text")),
-      acceptDir, quarantineDir, checkpointDir, filesPerTrigger, processAll)
+      acceptDir, quarantineDir, checkpointDir, filesPerTrigger)
 }

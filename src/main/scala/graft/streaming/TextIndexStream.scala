@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.TextIndex
@@ -36,24 +37,10 @@ object TextIndexStream {
       schema: StructType,
       indexDir: String,
       checkpointDir: String,
-      filesPerTrigger: Int = 1,
-      processAll: Boolean = true): StreamingQuery = {
-    val trigger =
-      if (processAll) Trigger.AvailableNow()
-      else Trigger.ProcessingTime("10 seconds")
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        TextIndex.appendTextIndex(batch, indexDir, id)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
+      filesPerTrigger: Int = 1): StreamingQuery =
+    fileBatches(spark, inDir, schema, checkpointDir, filesPerTrigger) { (batch, id) =>
+      TextIndex.appendTextIndex(batch, indexDir, id)
+    }
 
   /** [[textIngest]] with a RETENTION WINDOW — the TTL'd index service
     * (a rolling "last N ingest days" search tier): after each
@@ -82,20 +69,11 @@ object TextIndexStream {
       checkpointDir: String,
       keepBatches: Int,
       filesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        TextIndex.appendTextIndex(batch, indexDir, id)
-        TextIndex.expireTextIndex(spark, indexDir,
-          cutoffBatch = id - keepBatches + 1)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    fileBatches(spark, inDir, schema, checkpointDir, filesPerTrigger) { (batch, id) =>
+      TextIndex.appendTextIndex(batch, indexDir, id)
+      TextIndex.expireTextIndex(spark, indexDir,
+        cutoffBatch = id - keepBatches + 1)
+    }
 
   /** CONTINUOUS SERVING — the fourth quadrant of the index-lifecycle
     * matrix (batch ingest tx34 / streaming ingest st16 / batch serve
@@ -124,19 +102,9 @@ object TextIndexStream {
       checkpointDir: String,
       k: Int,
       filesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        import org.apache.spark.sql.functions.lit
-        val qterms = TextIndex.queryTermsMulti(batch, lit(true))
-        TextIndex.probeTextIndexMulti(spark, indexDir, qterms, k)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    fileBatches(spark, inDir, schema, checkpointDir, filesPerTrigger) { (batch, id) =>
+      val qterms = TextIndex.queryTermsMulti(batch, lit(true))
+      TextIndex.probeTextIndexMulti(spark, indexDir, qterms, k)
+        .write.mode("overwrite").parquet(s"$outDir/batch=$id")
+    }
 }

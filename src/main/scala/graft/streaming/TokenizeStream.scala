@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.Bpe
@@ -45,29 +45,20 @@ object TokenizeStream {
       outDir: String,
       checkpointDir: String,
       filesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val words = batch.select(col("doc_id"),
-          explode(filter(split(col("text"), " "), x => x =!= "")).as("word"))
-        // batch-bounded dict: each DISTINCT word runs the merge chain
-        // once; repeated words ride the broadcast join (tx46's
-        // dict idiom, scoped to the micro-batch)
-        val dict = words.select("word").distinct()
-          .select(col("word"),
-            size(split(Bpe.tokenizeExpr(col("word"), merges), " "))
-              .cast("long").as("n_tok"))
-        words.join(broadcast(dict), Seq("word"))
-          .groupBy("doc_id")
-          .agg(count(lit(1)).cast("long").as("n_words"),
-            sum("n_tok").cast("long").as("n_tokens"))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    fileBatches(spark, inDir, schema, checkpointDir, filesPerTrigger) { (batch, id) =>
+      val words = batch.select(col("doc_id"),
+        explode(filter(split(col("text"), " "), x => x =!= "")).as("word"))
+      // batch-bounded dict: each DISTINCT word runs the merge chain
+      // once; repeated words ride the broadcast join (tx46's
+      // dict idiom, scoped to the micro-batch)
+      val dict = words.select("word").distinct()
+        .select(col("word"),
+          size(split(Bpe.tokenizeExpr(col("word"), merges), " "))
+            .cast("long").as("n_tok"))
+      words.join(broadcast(dict), Seq("word"))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).cast("long").as("n_words"),
+          sum("n_tok").cast("long").as("n_tokens"))
+        .write.mode("overwrite").parquet(s"$outDir/batch=$id")
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.VectorOps
@@ -53,27 +53,19 @@ object VectorStream {
       centroids: DataFrame,
       indexDir: String,
       checkpointDir: String,
-      filesPerTrigger: Int = 1,
-      processAll: Boolean = true): StreamingQuery = {
-    val trigger =
-      if (processAll) Trigger.AvailableNow() else Trigger.ProcessingTime("10 seconds")
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        VectorOps.assignClusters(
-          batch.select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-          centroids)
-          .write.partitionBy("cid").mode("overwrite")
-          .parquet(s"$indexDir/batch=$id")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
+      filesPerTrigger: Int = 1): StreamingQuery =
+    fileBatches(spark, inDir, schema, checkpointDir, filesPerTrigger)(
+      assignShard(centroids, indexDir))
+
+  /** One micro-batch assigned against the frozen codebook and written
+    * into its cells over `batch=<id>`. */
+  private def assignShard(centroids: DataFrame, indexDir: String)(
+      batch: DataFrame, id: Long): Unit =
+    VectorOps.assignClusters(
+      batch.select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
+      centroids)
+      .write.partitionBy("cid").mode("overwrite")
+      .parquet(s"$indexDir/batch=$id")
 
   /** [[ivfIngest]] with a RETENTION WINDOW — the vector-side TTL'd
     * index service (the [[TextIndexStream.textIngestWithRetention]]
@@ -95,22 +87,9 @@ object VectorStream {
       checkpointDir: String,
       keepBatches: Int,
       filesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        VectorOps.assignClusters(
-          batch.select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-          centroids)
-          .write.partitionBy("cid").mode("overwrite")
-          .parquet(s"$indexDir/batch=$id")
-        graft.ops.DedupOps.expireShards(spark, indexDir, "batch",
-          id - keepBatches + 1)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    fileBatches(spark, inDir, schema, checkpointDir, filesPerTrigger) { (batch, id) =>
+      assignShard(centroids, indexDir)(batch, id)
+      graft.ops.DedupOps.expireShards(spark, indexDir, "batch",
+        id - keepBatches + 1)
+    }
 }

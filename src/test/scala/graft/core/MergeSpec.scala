@@ -159,22 +159,41 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("runAll: a batch whose output name an earlier batch used fails instead of overwriting") {
-    writeSingle(Seq((1L, "a")).toDF("id", "t"), s"$root/dup/x/sales_2023.parquet")
-    writeSingle(Seq((2L, "b")).toDF("id", "t"), s"$root/dup/y/sales_2023.parquet")
-    writeSingle(Seq((3L, "c")).toDF("id", "t"), s"$root/dup/x/sales_2024.parquet")
-    writeSingle(Seq((4L, "d")).toDF("id", "t"), s"$root/dup/y/sales_2024.parquet")
-    val files = Discovery.scanFolders(spark, Seq(s"$root/dup/x", s"$root/dup/y"))
-    val (groups, _) = Discovery.smartBatch(files)
-    val jobs = groups.zipWithIndex.map { case ((_, fs), i) => MergeJobs.buildJob(spark, fs, i + 1) }
-    // trailing digits are stripped from batch names: both are "sales"
+    val paths = Seq("sales_2023", "sales_2024", "sales_2025", "sales_2026").zipWithIndex.map {
+      case (stem, i) =>
+        val p = s"$root/dup/$stem.parquet"
+        writeSingle(Seq((i.toLong + 1, stem)).toDF("id", "t"), p)
+        p
+    }
+    // different stems: trailing digits are stripped, so both are "sales"
+    val jobs = paths.grouped(2).zipWithIndex
+      .map { case (ps, i) => MergeJobs.buildJob(spark, ps.map(ref), i + 1) }.toSeq
     assert(jobs.map(_.name) == Seq("sales", "sales"))
     val (outcomes, remaining) = MergeJobs.runAll(spark, jobs, s"$root/dup/out")
     val dest = s"$root/dup/out/merged/sales.parquet"
     assert(outcomes.head.isRight)
     assert(outcomes(1) == Left((jobs(1), s"Output name already used in this run: $dest")))
     assert(remaining == Seq(jobs(1)))
-    // the first (sales_2023) batch's rows are intact
+    // the first (sales_2023 + sales_2024) batch's rows are intact
     assert(spark.read.parquet(dest).select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+  }
+
+  test("runAll: smart batches keep their file stem, so sales_2023 and sales_2024 both merge") {
+    writeSingle(Seq((1L, "a")).toDF("id", "t"), s"$root/stems/x/sales_2023.parquet")
+    writeSingle(Seq((2L, "b")).toDF("id", "t"), s"$root/stems/y/sales_2023.parquet")
+    writeSingle(Seq((3L, "c")).toDF("id", "t"), s"$root/stems/x/sales_2024.parquet")
+    writeSingle(Seq((4L, "d")).toDF("id", "t"), s"$root/stems/y/sales_2024.parquet")
+    val files = Discovery.scanFolders(spark, Seq(s"$root/stems/x", s"$root/stems/y"))
+    val (groups, _) = Discovery.smartBatch(files)
+    val jobs = groups.zipWithIndex.map { case ((_, fs), i) => MergeJobs.buildJob(spark, fs, i + 1) }
+    assert(jobs.map(_.name) == Seq("sales_2023", "sales_2024"))
+    val (outcomes, remaining) = MergeJobs.runAll(spark, jobs, s"$root/stems/out")
+    assert(outcomes.forall(_.isRight))
+    assert(remaining.isEmpty)
+    def ids(name: String) = spark.read.parquet(s"$root/stems/out/merged/$name.parquet")
+      .select("id").as[Long].collect().sorted.toSeq
+    assert(ids("sales_2023") == Seq(1L, 2L))
+    assert(ids("sales_2024") == Seq(3L, 4L))
   }
 
   test("writeSingleFile: failed write leaves no staging/tmp litter and keeps prior output") {

@@ -32,6 +32,7 @@ class NamingSpec extends AnyFunSuite {
   test("generateBatchName ladder (fixture B8, main.rs:440-480)") {
     assert(Naming.generateBatchName(Seq("only"), 1) == "only")
     assert(Naming.generateBatchName(Seq("sales_2023", "sales_2024"), 1) == "sales")
+    assert(Naming.generateBatchName(Seq("sales_2023", "sales_2023"), 1) == "sales_2023")
     assert(Naming.generateBatchName(Seq("q1_report", "q2_report"), 1) == "report")
     assert(Naming.generateBatchName(Seq("x_core_a", "b_core_y"), 1) == "_core_")
     assert(Naming.generateBatchName(Seq("ab", "cd"), 7) == "batch_7")
