@@ -1,23 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    // Saturating every core with task threads starves the JVM's JIT
-    // compiler threads: whole queries then run interpreted, showing up
-    // as random 5-15x per-query spikes run-to-run. Leave 2 cores of
-    // headroom for JIT/GC once the box is big enough to afford it.
-    val workers = if (cpus >= 16) cpus - 2 else cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$workers]")
-      .config("spark.sql.shuffle.partitions", workers)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS): read as Long, ops convert
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    // Optional regex filter for local iteration on a subset
+    // (e.g. SPARK_GRAFT_BENCH_FILTER='q3[789]|tx14'); unset = all.
+    val selected = Runner.select(sys.env.get("SPARK_GRAFT_BENCH_FILTER"))
+    val timedRuns = Session.positiveInt("SPARK_GRAFT_BENCH_RUNS",
+      sys.env.get("SPARK_GRAFT_BENCH_RUNS"), 3)
+    val spark = Session.local(Session.withJitHeadroom(cpus))
     // lifecycle queries publish their build/verb splits (r9 task 4);
     // enabling here keeps Verify/tests/library callers at zero overhead
     graft.core.PhaseTimer.enable()
@@ -30,31 +22,25 @@ object Bench {
       import org.apache.spark.sql.functions._
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select("l_orderkey", "l_quantity", "l_returnflag")
-      li.groupBy("l_returnflag").agg(sum("l_quantity")).queryExecution.toRdd.count()
-      li.withColumn("rn",
+      Runner.force(li.groupBy("l_returnflag").agg(sum("l_quantity")))
+      Runner.force(li.withColumn("rn",
           row_number().over(Window.partitionBy("l_returnflag").orderBy("l_orderkey")))
-        .filter(col("rn") === 1).queryExecution.toRdd.count()
-      spark.range(100).select(
+        .filter(col("rn") === 1))
+      Runner.force(spark.range(100).select(
         aggregate(transform(sequence(lit(1), lit(5)), x => x * col("id")),
-          lit(0L), (a, x) => a + x).as("s")).queryExecution.toRdd.count()
+          lit(0L), (a, x) => a + x).as("s")))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] warmup failed (non-fatal): ${e.getMessage}")
     }
     // One timed execution of a query; -1 marks failure (a failed query
     // must not masquerade as a fast run). Returns the PhaseTimer split
     // the body published (empty for non-lifecycle queries).
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Map[String, Double]) = {
+    def once(q: QueryDef): (Double, Map[String, Double]) = {
       graft.core.PhaseTimer.reset()
       val t0 = System.nanoTime()
-      // toRdd forces every output column to be computed (a plain count()
-      // would let Catalyst prune the projections away).
-      try {
-        fn(spark, sfDir).queryExecution.toRdd.count()
-        ((System.nanoTime() - t0) / 1e9, graft.core.PhaseTimer.snapshot())
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        (-1.0, Map.empty)
+      Runner.run("bench", spark, sfDir, q)(Runner.force) match {
+        case Right(_) => ((System.nanoTime() - t0) / 1e9, graft.core.PhaseTimer.snapshot())
+        case Left(_)  => (-1.0, Map.empty)
       }
     }
     // Per query: ONE warm-up execution (excluded from timing — it
@@ -69,10 +55,6 @@ object Bench {
     // b=0.34), and queries early in the fixed order paid the
     // compilation of later queries' shared helper classes. Min-of-3
     // after a warm-up reports the engine's steady state.
-    // Optional regex filter for local iteration on a subset
-    // (e.g. SPARK_GRAFT_BENCH_FILTER='q3[789]|tx14'); unset = all.
-    val nameFilter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
-    val timedRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
 
     // ---- Contamination sentinel (r9 verdict task 1) ----------------
     // r9 shipped three mutually contradictory totals for one engine
@@ -105,9 +87,9 @@ object Bench {
       scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
     def sentinelPass(): Unit = {
       val pass = sentinelNames.flatMap { n =>
-        SparkEntry.queries.get(n).map { fn =>
-          once(n, fn) // warm-up, excluded
-          n -> Seq.fill(3)(once(n, fn)._1).filter(_ >= 0).minOption
+        SparkEntry.defs.find(_.name == n).map { q =>
+          once(q) // warm-up, excluded
+          n -> Seq.fill(3)(once(q)._1).filter(_ >= 0).minOption
             .getOrElse(-1.0)
         }
       }.toMap
@@ -116,21 +98,19 @@ object Bench {
         .map { case (n, v) => f"$n=$v%.3f" }.mkString(" "))
     }
 
-    def runOne(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (String, Double, Map[String, Double]) = {
-      val (w, _) = once(name, fn) // warm-up, excluded
-      val runs = Seq.fill(timedRuns)(once(name, fn))
+    def runOne(q: QueryDef): (String, Double, Map[String, Double]) = {
+      val (w, _) = once(q) // warm-up, excluded
+      val runs = Seq.fill(timedRuns)(once(q))
       val timings = runs.map(_._1)
       // the phase split travels with the run that produced the min
       val best = runs.filter(_._1 >= 0).minByOption(_._1)
       val phases = best.map(_._2).getOrElse(Map.empty)
       val phaseStr = if (phases.isEmpty) "" else phases.toSeq.sortBy(_._1)
         .map { case (p, t) => f"$p=$t%.3f" }.mkString(" phases{", ",", "}")
-      System.err.println(f"[bench] $name%-24s w=$w%.3f " +
+      System.err.println(f"[bench] ${q.name}%-24s w=$w%.3f " +
         timings.zipWithIndex.map { case (t, i) => f"r${i + 1}=$t%.3f" }
           .mkString(" ") + phaseStr)
-      (name,
+      (q.name,
         if (w < 0 || timings.exists(_ < 0)) -1.0 else timings.min,
         phases)
     }
@@ -168,16 +148,15 @@ object Bench {
     }
 
     sentinelPass()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => nameFilter.forall(_.findFirstIn(n).isDefined) }
+    val results = selected
       .grouped(48).toSeq.flatMap { section =>
-        val first = section.map { case (n, fn) => runOne(n, fn) }
+        val first = section.map(runOne)
         sentinelPass()
         if (!closingPassBreached()) first
         else {
           System.err.println(s"[bench] sentinel breach — re-running the " +
             s"${section.size}-query section once (bounded retry)")
-          val second = section.map { case (n, fn) => runOne(n, fn) }
+          val second = section.map(runOne)
           sentinelPass()
           // merge the breached and post-retry closing passes into the
           // box's best demonstrated state; keep the breached values

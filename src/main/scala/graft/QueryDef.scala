@@ -46,8 +46,8 @@ object Tables {
     *    event data by design;
     *  - TIMESTAMP_NTZ (micros, no zone): reinterpret in the session zone
     *    — only oracle-exact when the session zone is UTC (the same
-    *    wall-clock DuckDB reads), so that pin is asserted here rather
-    *    than trusted to each builder;
+    *    wall-clock DuckDB reads). `graft.core.Session` sets that pin;
+    *    a frame from any other session is checked here;
     *  - TIMESTAMP: already canonical. */
   def normalizeTs(df: DataFrame, c: String = "ts"): DataFrame = {
     import org.apache.spark.sql.functions.{assert_true, col, concat, expr, lit, timestamp_micros, when}

@@ -2,9 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
 import graft.ops.{DedupOps, TextIndex, VectorOps}
 
 /** Measured scaling EXPONENTS for the headline sub-quadratic claims
@@ -139,21 +140,19 @@ object Scaling {
     val newV = oldV.select(col("vec_id"),
       transform(col("v"), x => x + lit(0.1)).as("v"))
 
-    def force(df: DataFrame): Unit = { df.queryExecution.toRdd.count(); () }
-
     // prep(n) runs UNTIMED before every invocation (fresh copies for
     // in-place verbs; identity for pure reads); the returned thunk is
     // what the clock sees.
     val kernels: Seq[(String, Seq[Long], Long => () => Unit)] = Seq(
       ("dd02_minhash_lsh", docSizes,
-        n => () => force(DedupOps.minHashNearDupsPortable(withCopy(n)))),
+        n => () => Runner.force(DedupOps.minHashNearDupsPortable(withCopy(n)))),
       ("dd06_exact_ppjoin", docSizes,
-        n => () => force(DedupOps.exactJaccardPairs(withCopy(n)))),
+        n => () => Runner.force(DedupOps.exactJaccardPairs(withCopy(n)))),
       ("dd17_index_probe", docSizes,
-        n => () => force(DedupOps.lshIndexProbe(batch, spark.table(idxTable(n)),
+        n => () => Runner.force(DedupOps.lshIndexProbe(batch, spark.table(idxTable(n)),
           dslice(n).unionByName(batch)))),
       ("tx33_text_probe", docSizes,
-        n => () => force(TextIndex.probeTextIndex(spark, txtIdxDir(n), fixedQuery, 10))),
+        n => () => Runner.force(TextIndex.probeTextIndex(spark, txtIdxDir(n), fixedQuery, 10))),
       ("vs02_ivf_probe", vecSizes, { n =>
         () => {
           val e = vslice(n)
@@ -165,7 +164,7 @@ object Scaling {
               col("cid").as("pcid"))
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy("probe_id").orderBy(col("c").desc, col("neighbor_id"))
-          force(asg.join(broadcast(probes),
+          Runner.force(asg.join(broadcast(probes),
               col("cid") === col("pcid") && col("vec_id") =!= col("probe_id"))
             .select(col("probe_id"), col("vec_id").as("neighbor_id"),
               VectorOps.cosine(col("pv"), col("v")).as("c"))
@@ -183,7 +182,7 @@ object Scaling {
         }
       }),
       ("dd20_index_delete", docSizes,
-        n => () => force(DedupOps.lshIndexDelete(
+        n => () => Runner.force(DedupOps.lshIndexDelete(
           spark.table(idxTable(n)), removedKeys))),
       ("vs26_ivf_reversion", vecSizes, { n =>
         val work = graft.core.Scratch.dir(s"graft_scaling_rev_${n}_") + "/idx"
@@ -211,7 +210,7 @@ object Scaling {
           assets.filter(col("doc_id") % 10 === 0)
             .select((col("doc_id") + lit(100000L)).as("doc_id"),
               concat(col("payload"), encode(lit(" v2edit"), "UTF-8")).as("payload")))
-        () => force(graft.ops.MultimodalOps.payloadNearDups(withEdits))
+        () => Runner.force(graft.ops.MultimodalOps.payloadNearDups(withEdits))
       }))
 
     kernels.map { case (name, sizes, prep) =>
@@ -234,16 +233,7 @@ object Scaling {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val outFile = args.lift(1).getOrElse("SCALING.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val workers = if (cpus >= 16) cpus - 2 else cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$workers]")
-      .config("spark.sql.shuffle.partitions", workers)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.withJitHeadroom(Session.cpus))
     val m = measure(spark, sfDir)
     val notes = "Endpoint log-log runtime exponents over ~1x/3x/10x " +
       "nested natural-data slices, warmed min-of-3 per point " +

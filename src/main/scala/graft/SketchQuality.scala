@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Session
+
 /** Quality audit of the sketch-tier operators against their exact
   * tiers — the numbers behind the "cross-checked in specs" claim, made
   * bench-visible: run
@@ -172,15 +174,7 @@ object SketchQuality {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("SKETCH_QUALITY.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     val m = metrics(spark, sfDir)
     def f(v: Double): String = if (v == v.floor && v.abs < 1e15) v.toLong.toString
       else f"$v%.6f"

@@ -1,36 +1,30 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset}
 
-import graft.core.{Discovery, Merge, MergeException, MergeJobs, ParquetFileRef}
+import graft.core.{Discovery, Merge, MergeException, MergeJobs, ParquetFileRef, Scratch, Session}
+import graft.streaming.EventStream
 
 /** End-to-end smoke driver for the merge pipeline surface: generates
-  * fixture folders in a temp dir, then exercises discovery → smart
-  * batch → schema probe → merge → CSV export, plus the error paths
-  * (disjoint schemas, unreadable file). Run:
+  * fixture folders in one scratch dir (removed when the JVM exits), then
+  * exercises discovery → smart batch → schema probe → merge → CSV
+  * export, plus the error paths (disjoint schemas, unreadable file). Run:
   *   sbt "runMain graft.Smoke"
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     import spark.implicits._
 
-    val root = Files.createTempDirectory("graft_smoke_").toString
+    val root = Scratch.dir("graft_smoke_")
     println(s"[smoke] fixtures under $root")
+    val events = Paths.get("/root/testdata/sf0.001/events.parquet")
 
     // The reference merges plain single parquet FILES, so fixtures must
     // be files, not Spark's part-file directories.
-    def writeSingle(df: org.apache.spark.sql.DataFrame, dest: String): Unit =
+    def writeSingle(df: DataFrame, dest: String): Unit =
       Merge.writeSingleFile(df, dest)
 
     // B1 identical schemas: a/daily.parquet + b/daily.parquet
@@ -45,7 +39,7 @@ object Smoke {
     writeSingle(Seq(Tuple1(1L)).toDF("a"), s"$root/a/disjoint.parquet")
     writeSingle(Seq(Tuple1(2L)).toDF("b"), s"$root/b/disjoint.parquet")
     // B9 unreadable: not a parquet file
-    Files.write(java.nio.file.Paths.get(s"$root/a/bad.parquet"), "not parquet".getBytes)
+    Files.write(Paths.get(s"$root/a/bad.parquet"), "not parquet".getBytes)
 
     // 1. discovery (case-insensitive ext, recursive, sorted display path)
     val files = Discovery.scanFolders(spark, Seq(s"$root/a", s"$root/b"))
@@ -100,34 +94,28 @@ object Smoke {
 
     // 8. streaming surface: windowed agg + stateful sessionization over
     // the events table staged as a file-source directory
-    val streamDir = Files.createTempDirectory("graft_smoke_stream_")
-    Files.copy(
-      java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
-      streamDir.resolve("events.parquet"))
-    val src = graft.streaming.EventStream.readEvents(spark, streamDir.toString)
-    val q1 = graft.streaming.EventStream.hourlyCounts(src)
-      .writeStream.outputMode("append").format("memory").queryName("smoke_hourly").start()
-    q1.processAllAvailable(); q1.stop()
-    println(s"[smoke] streaming hourly windows emitted: ${spark.table("smoke_hourly").count()}")
-    val q2 = graft.streaming.EventStream.sessionize(src, gapMinutes = 30)
-      .writeStream.outputMode("append").format("memory").queryName("smoke_sessions").start()
-    q2.processAllAvailable(); q2.stop()
-    println(s"[smoke] streaming sessions closed: ${spark.table("smoke_sessions").count()}")
+    val streamDir = Files.createDirectory(Paths.get(root, "stream"))
+    Files.copy(events, streamDir.resolve("events.parquet"))
+    // runs `ds` into the memory table `table` until its input is drained
+    def drain(ds: Dataset[_], table: String): Long = {
+      val q = ds.writeStream.outputMode("append").format("memory").queryName(table).start()
+      q.processAllAvailable(); q.stop()
+      spark.table(table).count()
+    }
+    val src = EventStream.readEvents(spark, streamDir.toString)
+    val hourly = drain(EventStream.hourlyCounts(src), "smoke_hourly")
+    println(s"[smoke] streaming hourly windows emitted: $hourly")
+    val sessions = drain(EventStream.sessionize(src, gapMinutes = 30), "smoke_sessions")
+    println(s"[smoke] streaming sessions closed: $sessions")
     spark.table("smoke_sessions").show(3, truncate = false)
-    Files.copy(
-      java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
-      streamDir.resolve("events_copy.parquet"))
-    val q3 = graft.streaming.EventStream.dedupStream(
-        graft.streaming.EventStream.readEvents(spark, streamDir.toString), Seq("event_id"))
-      .writeStream.outputMode("append").format("memory").queryName("smoke_dedup").start()
-    q3.processAllAvailable(); q3.stop()
-    val q4 = graft.streaming.EventStream.clickToPurchase(
-        graft.streaming.EventStream.readEvents(spark, streamDir.toString), windowMinutes = 60)
-      .writeStream.outputMode("append").format("memory").queryName("smoke_attr").start()
-    q4.processAllAvailable(); q4.stop()
-    println(s"[smoke] streaming click->purchase attributions: ${spark.table("smoke_attr").count()}")
-    println(s"[smoke] streaming dedup kept: ${spark.table("smoke_dedup").count()} of " +
-      s"${2 * spark.read.parquet("/root/testdata/sf0.001/events.parquet").count()} duplicated events")
+    Files.copy(events, streamDir.resolve("events_copy.parquet"))
+    val kept = drain(EventStream.dedupStream(
+      EventStream.readEvents(spark, streamDir.toString), Seq("event_id")), "smoke_dedup")
+    val attributed = drain(EventStream.clickToPurchase(
+      EventStream.readEvents(spark, streamDir.toString), windowMinutes = 60), "smoke_attr")
+    println(s"[smoke] streaming click->purchase attributions: $attributed")
+    println(s"[smoke] streaming dedup kept: $kept of " +
+      s"${2 * spark.read.parquet(events.toString).count()} duplicated events")
 
     // 9. persisted IVF index: cluster-partitioned write + pruned probes
     import org.apache.spark.sql.functions.{col, broadcast}
@@ -147,16 +135,10 @@ object Smoke {
 
     // 10. compaction: many small files -> target-sized files
     {
-      val inDir = java.nio.file.Files.createTempDirectory("graft_smoke_compact_")
-      import spark.implicits._
       val files = (0 until 6).map { i =>
-        val tmp = java.nio.file.Files.createTempDirectory("graft_smoke_cstage_")
-        (0 until 200).map(r => i.toLong * 1000 + r).toDF("id")
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = inDir.resolve(s"f$i.parquet"); java.nio.file.Files.move(part.toPath, dst)
-        dst.toString
+        val dst = s"$root/compact_in/f$i.parquet"
+        writeSingle((0 until 200).map(r => i.toLong * 1000 + r).toDF("id"), dst)
+        dst
       }
       val bytes = files.map(f => new java.io.File(f).length()).sum
       val (rows, nOut) = graft.core.Merge.compact(
@@ -166,10 +148,8 @@ object Smoke {
 
     // 11. continuous merge: checkpointed exactly-once folder ingest
     {
-      val inDir = java.nio.file.Files.createTempDirectory("graft_smoke_cm_in_")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
-        inDir.resolve("events.parquet"))
+      val inDir = Files.createDirectory(Paths.get(root, "cm_in"))
+      Files.copy(events, inDir.resolve("events.parquet"))
       val schema = graft.core.Merge.probeSchema(
         spark, inDir.resolve("events.parquet").toString)
       val q = graft.streaming.MergeStream.continuousMerge(
@@ -195,21 +175,15 @@ object Smoke {
 
     // 13. streaming keyed upsert (CDC apply)
     {
-      import spark.implicits._
-      val in = java.nio.file.Files.createTempDirectory("graft_smoke_ups_in_")
+      val in = s"$root/ups_in"
       val table = s"$root/ups_table"
       val base = (1L to 20L).map(i => (i, 0L, s"v$i")).toDF("id", "version", "payload")
       graft.ops.Upsert.writeBucketed(base, table, "id", nBuckets = 4)
-      val stage = java.nio.file.Files.createTempDirectory("graft_smoke_ups_st_")
-      Seq((5L, 1L, "updated"), (21L, 1L, "inserted"))
-        .toDF("id", "version", "payload")
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = new java.io.File(stage.toString).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath, in.resolve("c1.parquet"))
-      val schema = graft.core.Merge.probeSchema(spark, in.resolve("c1.parquet").toString)
+      writeSingle(Seq((5L, 1L, "updated"), (21L, 1L, "inserted"))
+        .toDF("id", "version", "payload"), s"$in/c1.parquet")
+      val schema = graft.core.Merge.probeSchema(spark, s"$in/c1.parquet")
       val q = graft.streaming.MergeStream.upsertStream(
-        spark, in.toString, schema, table, "id", "version", 4, s"$root/ups_ckpt")
+        spark, in, schema, table, "id", "version", 4, s"$root/ups_ckpt")
       q.awaitTermination()
       println(s"[smoke] streaming upsert: table now ${spark.read.parquet(table).count()} rows")
     }

@@ -12,7 +12,10 @@ import graft.ops.{DedupOps, EventOps, Layout, MultimodalOps, Pipeline, RangeJoin
   * semantics are ANSI-expressible). */
 object SparkEntry {
 
-  private val all: Seq[QueryDef] =
+  /** Every registered query in registration order, duplicates included
+    * (RegistrySpec asserts there are none: they would collapse in the
+    * [[queries]] map). */
+  private[graft] val defs: Seq[QueryDef] =
     Relational.defs ++ EventOps.defs ++ TextOps.defs ++
       DedupOps.defs ++ VectorOps.defs ++ MultimodalOps.defs ++
       SampleOps.defs ++ RangeJoin.defs ++ Layout.defs ++ Pipeline.defs ++
@@ -34,17 +37,11 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> q.fn).toMap
-
-  /** Registration order, duplicates included — RegistrySpec asserts
-    * no two modules register the same name (a duplicate would
-    * silently collapse in the [[queries]] map) and that the counts
-    * COVERAGE.md / README.md quote equal the live registry. */
-  private[graft] def queryNames: Seq[String] = all.map(_.name)
+    defs.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
     * (LSH/SimHash internals, approximate sketches). */
   def oracleSql: Map[String, String] =
-    all.collect { case QueryDef(n, Some(sql), _) => n -> sql }.toMap
+    defs.collect { case QueryDef(n, Some(sql), _) => n -> sql }.toMap
 }

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.core.Session
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -8,29 +8,12 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: regex over query names, for spot checks; the
     // listing below then names only the queries this run attempted.
-    // sbt's runMain passes single quotes through, so `'^st'` is `^st`.
-    val filter = args.lift(2).map(_.stripPrefix("'").stripSuffix("'").r)
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => filter.forall(_.findFirstIn(name).isDefined) }
-    // an empty selection would write an empty listing that checks clean
-    require(selected.nonEmpty, s"no registered query matches ${filter.mkString}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS): read as Long, ops convert
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Runner.select(args.lift(2))
+    val spark = Session.local(Session.cpus)
     new java.io.File(outDir).mkdirs()
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    selected.foreach { d =>
+      Runner.run("verify", spark, sfDir, d)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${d.name}"))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -51,7 +34,7 @@ object Verify {
     // filtered) so checkers can flag queries that failed to produce
     // output (a missing dir must read as FAIL, not absence)
     Files.writeString(Paths.get(s"$outDir/query_names.json"),
-      selected.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      selected.map(d => q(d.name)).mkString("[", ",", "]"))
     spark.stop()
   }
 }

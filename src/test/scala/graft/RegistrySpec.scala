@@ -22,7 +22,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("no two modules register the same query name") {
-    val names = SparkEntry.queryNames
+    val names = SparkEntry.defs.map(_.name)
     val dupes = names.groupBy(identity).collect {
       case (name, hits) if hits.size > 1 => name
     }
@@ -58,7 +58,7 @@ class RegistrySpec extends AnyFunSuite {
 
   test("query names follow the family naming scheme") {
     val pattern = raw"^(q\d+|dd\d+|vs\d+|tx\d+|sp\d+|ev\d+|mm\d+|rj\d+|st\d+|ly\d+|pp\d+)_[a-z0-9_]+$$".r
-    val off = SparkEntry.queryNames.filterNot(pattern.matches(_))
+    val off = SparkEntry.defs.map(_.name).filterNot(pattern.matches(_))
     assert(off.isEmpty, s"names outside the <family><nn>_<slug> scheme: $off")
   }
 }

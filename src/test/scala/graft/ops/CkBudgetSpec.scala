@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, TestSpark}
+import graft.{QueryDef, Runner, TestSpark}
 
 /** Enforces the safety argument in [[Pin.checkpointed]]'s Scaladoc
   * (r11 VERDICT item 3 / ADVICE): the KeepCk=6 deque force-unpersists
@@ -23,8 +23,8 @@ class CkBudgetSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("no query keeps more than KeepCk/2 = 3 localCheckpoints live at once") {
-    val over = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
+    val over = Runner.select(None).flatMap {
+      case QueryDef(name, _, fn) =>
         Pin.resetBudget()
         // eager checkpoints (and loop-kernel create/release cycles)
         // run during plan construction

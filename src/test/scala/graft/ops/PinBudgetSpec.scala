@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, TestSpark}
+import graft.{QueryDef, Runner, TestSpark}
 
 /** Enforces the sizing argument in [[Pin]]'s Scaladoc: `Keep` = 6 is
   * safe only while no single query pins more than `Keep` frames —
@@ -17,8 +17,8 @@ class PinBudgetSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("no query performs more than Keep=6 Pin.once calls") {
-    val over = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
+    val over = Runner.select(None).flatMap {
+      case QueryDef(name, _, fn) =>
         Pin.resetBudget()
         fn(spark, sf) // pins happen during plan construction
         val n = Pin.pinsSinceReset

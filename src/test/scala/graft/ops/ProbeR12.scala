@@ -1,31 +1,23 @@
 package graft.ops
 
 import graft.SparkEntry
+import graft.core.Session
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** r12 stage-level profiler — TEST-ONLY scratch tooling, deliberately
   * under src/test so it can never break the library build (the r11
   * lesson). Run:
-  *   sbt 'Test/runMain graft.ProbeR12 [section ...]'
+  *   sbt 'Test/runMain graft.ops.ProbeR12 [section ...]'
   * Times sub-stages of the hot shared kernels at sf0.1 with the noop
   * sink (guide §1.4), min-of-3 after one warm-up, bench-like session.
   */
 object ProbeR12 {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val workers = if (cpus >= 16) cpus - 2 else cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$workers]")
-      .config("spark.sql.shuffle.partitions", workers)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.withJitHeadroom(Session.cpus))
     import spark.implicits._
 
     def noop(df: DataFrame): Unit =
