@@ -178,14 +178,16 @@ object SketchQuality {
     val m = metrics(spark, sfDir)
     def f(v: Double): String = if (v == v.floor && v.abs < 1e15) v.toLong.toString
       else f"$v%.6f"
+    val ev14 = m.toMap.apply("ev14_approx_quantiles").toMap
     val notes =
       "All registered queries are oracle-exact since r7; the *_native_* rows " +
         "carry the accuracy floors for the builtin engine-internal sketches. " +
         "ev14 (registered) is the portable bottom-k-by-hash sample quantile: " +
-        "EXACT below its k=10^4 cap (every audit SF's groups; rank error 0 here), " +
-        "a deterministic ~sqrt(q(1-q)/k) sample estimator above it — sf0.1's " +
-        "20k-row groups exercise that sampled tier under the driver's bit-parity " +
-        "gate; ev14_native_gk carries the builtin GK (percentile_approx) " +
+        "EXACT below its k=10^4 cap, a deterministic ~sqrt(q(1-q)/k) sample " +
+        "estimator above it — sf0.1's 20k-row groups exercise that sampled tier " +
+        "under the driver's bit-parity gate; its max rank error at this SF is " +
+        s"${f(ev14("max_rank_err_p50"))} (p50) and ${f(ev14("max_rank_err_p95"))} (p95). " +
+        "ev14_native_gk carries the builtin GK (percentile_approx) " +
         "rank-error floor, whose merge-order-dependent summary is the part no " +
         "external oracle can replay. " +
         "q18 (registered) is the portable KMV synopsis since r7 and oracle-exact; " +

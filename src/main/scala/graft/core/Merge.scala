@@ -96,11 +96,16 @@ object Merge {
     val spark   = df.sparkSession
     val staging = new org.apache.hadoop.fs.Path(dest + ".__staging__")
     val tmp     = new org.apache.hadoop.fs.Path(dest + ".__tmp__")
+    val old     = new org.apache.hadoop.fs.Path(dest + ".__old__")
     val target  = new org.apache.hadoop.fs.Path(dest)
     val fs      = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Staging (and the temp sibling) are cleaned up on EVERY exit path;
-    // the target is replaced with a sibling-to-sibling rename so the
-    // destination-missing window is a single metadata op, not a write.
+    // Hadoop rename/delete report failure via return value (or throw)
+    def moved(from: org.apache.hadoop.fs.Path, to: org.apache.hadoop.fs.Path) =
+      try fs.rename(from, to) catch { case _: java.io.IOException => false }
+    // Staging (and the temp sibling) are cleaned up on EVERY exit path.
+    // An existing target is renamed aside, not deleted, before the new
+    // file moves in, and moved back if that fails: `dest` always holds
+    // either the previous output or the new one.
     try {
       df.coalesce(1).write.mode("overwrite").format(format).options(options)
         .save(staging.toString)
@@ -110,14 +115,22 @@ object Merge {
         .getOrElse(throw new MergeException(s"No part file written under $staging"))
       if (!fs.mkdirs(target.getParent))
         throw new MergeException(s"Cannot create output directory: ${target.getParent}")
-      // Hadoop rename/delete report failure via return value, not exceptions
       if (fs.exists(tmp)) fs.delete(tmp, true)
-      if (!fs.rename(part, tmp))
+      if (!moved(part, tmp))
         throw new MergeException(s"Cannot move $part to $tmp")
-      if (fs.exists(target) && !fs.delete(target, true))
-        throw new MergeException(s"Cannot replace existing output: $dest")
-      if (!fs.rename(tmp, target))
-        throw new MergeException(s"Cannot move $tmp to $dest")
+      val replacing = fs.exists(target)
+      if (replacing) {
+        if (fs.exists(old)) fs.delete(old, true)
+        if (!moved(target, old))
+          throw new MergeException(s"Cannot move existing output $dest aside to $old")
+      }
+      if (!moved(tmp, target)) {
+        val kept = replacing && moved(old, target)
+        throw new MergeException(s"Cannot move $tmp to $dest" +
+          (if (kept) "; the previous output is kept"
+           else if (replacing) s"; the previous output is at $old" else ""))
+      }
+      if (replacing) fs.delete(old, true)
     } finally {
       fs.delete(staging, true)
       fs.delete(tmp, true)

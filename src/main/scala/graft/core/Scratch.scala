@@ -10,18 +10,16 @@ import java.util.concurrent.ConcurrentHashMap
   * streaming landing dir). `Files.createTempDirectory` alone leaks
   * one directory per execution — under the warmed min-of-3 bench
   * that's 4 copies per query per run, unbounded across rounds
-  * (ADVICE r7). This keeps exactly ONE live directory per tag:
-  * requesting a fresh dir for a tag deletes the previous one (the
-  * caller has finished with it — each query materializes its answer
-  * before returning), and a JVM shutdown hook removes the survivors.
+  * (ADVICE r7). This keeps the last TWO directories per tag:
+  * requesting generation k+2 of a tag deletes its generation k, and a
+  * JVM shutdown hook removes the survivors.
   *
-  * Deletion is deferred ONE generation (keep last-2, ADVICE r8):
-  * queries return lazy plans over scratch paths that are normally
-  * collected before the same query re-executes, but nothing enforces
-  * that sequencing — a harness that builds several runs' plans before
-  * collecting any would read a deleted path under keep-last-1. With
-  * last-2, requesting generation k+2 is what deletes generation k,
-  * and by then the tag's OWN next plan has been built over k+1.
+  * Why two (ADVICE r8): queries return lazy plans over scratch paths
+  * that are normally collected before the same query re-executes, but
+  * nothing enforces that sequencing — a harness that builds several
+  * runs' plans before collecting any would read a deleted path if the
+  * previous generation were deleted at once. By the time generation k
+  * goes, the tag's OWN next plan has been built over k+1.
   *
   * Thread-safety: the eviction runs inside the map's per-key compute,
   * so concurrent requests for the same tag cannot double-delete.

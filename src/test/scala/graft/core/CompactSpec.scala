@@ -13,9 +13,9 @@ class CompactSpec extends AnyFunSuite {
 
   private def smallFiles(n: Int, rowsEach: Int): (Seq[String], Long) = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_compact_in_")
+    val dir = TestSpark.tmpDir("graft_compact_in_")
     val files = (0 until n).map { i =>
-      val tmp = Files.createTempDirectory("graft_compact_stage_")
+      val tmp = TestSpark.tmpDir("graft_compact_stage_")
       (0 until rowsEach).map(r => (i.toLong * 10000 + r, s"row_${i}_$r"))
         .toDF("id", "payload").coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
@@ -29,7 +29,7 @@ class CompactSpec extends AnyFunSuite {
 
   test("compact bin-packs small files to ~target size without losing rows") {
     val (files, totalRows) = smallFiles(n = 12, rowsEach = 500)
-    val out = Files.createTempDirectory("graft_compact_out_").resolve("compacted")
+    val out = TestSpark.tmpDir("graft_compact_out_").resolve("compacted")
     val inputBytes = files.map(f => new java.io.File(f).length()).sum
     // target = ~1/3 of the input → expect about 3 output files
     val (rows, nOut) = Merge.compact(spark, files, out.toString, inputBytes / 3)
@@ -40,7 +40,7 @@ class CompactSpec extends AnyFunSuite {
 
   test("compact with a huge target collapses to one file; data matches input exactly") {
     val (files, totalRows) = smallFiles(n = 5, rowsEach = 100)
-    val out = Files.createTempDirectory("graft_compact_out_").resolve("one")
+    val out = TestSpark.tmpDir("graft_compact_out_").resolve("one")
     val (rows, nOut) = Merge.compact(spark, files, out.toString, Long.MaxValue)
     assert(rows == totalRows && nOut == 1)
     val a = spark.read.parquet(files: _*).orderBy("id").collect()

@@ -29,7 +29,7 @@ class CsvRenderSpec extends AnyFunSuite {
       Row(null, null, null, null, null, null, null, null, null, null))
     val df = spark.createDataFrame(rows, schema)
 
-    val root = java.nio.file.Files.createTempDirectory("graft_b6_").toString
+    val root = TestSpark.tmpDir("graft_b6_").toString
     Merge.writeSingleFile(df, s"$root/src.parquet")
     Merge.exportCsv(spark, s"$root/src.parquet", s"$root/out.csv")
 

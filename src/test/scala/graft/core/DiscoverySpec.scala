@@ -13,7 +13,7 @@ class DiscoverySpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val root: String = {
-    val r = Files.createTempDirectory("graft_discspec_").toString
+    val r = TestSpark.tmpDir("graft_discspec_").toString
     def writeSingle(dest: String): Unit =
       Merge.writeSingleFile(Seq((1L, "x")).toDF("id", "t"), dest)
     writeSingle(s"$r/folderA/sales.parquet")

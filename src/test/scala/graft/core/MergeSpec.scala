@@ -2,6 +2,7 @@ package graft.core
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
 import org.apache.spark.sql.functions.col
@@ -16,7 +17,7 @@ class MergeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private lazy val root = Files.createTempDirectory("graft_mergespec_").toString
+  private lazy val root = TestSpark.tmpDir("graft_mergespec_").toString
 
   /** Plain single parquet FILE (the reference's unit of merge). */
   private def writeSingle(df: DataFrame, dest: String): Unit =
@@ -221,4 +222,29 @@ class MergeSpec extends AnyFunSuite {
       .listFiles().map(_.getName).filterNot(_.startsWith(".")).toSet
     assert(names == Set("out.parquet"))
   }
+
+  test("writeSingleFile: a failed final rename keeps the previous output at dest") {
+    val dir = s"$root/failmv"
+    writeSingle(Seq((1L, "old"), (2L, "old")).toDF("id", "t"), s"$dir/out.parquet")
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failmv.impl", classOf[FailingCommitFs].getName)
+    val e = try intercept[MergeException] {
+      writeSingle(Seq((3L, "new")).toDF("id", "t"), s"failmv://$dir/out.parquet")
+    } finally conf.unset("fs.failmv.impl")
+    assert(spark.read.parquet(s"$dir/out.parquet").as[(Long, String)].collect().toSet ==
+      Set((1L, "old"), (2L, "old")))
+    val names = new java.io.File(dir).listFiles().map(_.getName).filterNot(_.startsWith(".")).toSet
+    assert(names == Set("out.parquet"), s"leftover files: ${names.mkString(", ")}")
+    assert(e.getMessage.contains("out.parquet") && e.getMessage.contains("previous output is kept"),
+      e.getMessage)
+  }
+}
+
+/** The local file system under its own `failmv:` scheme, whose rename of
+  * a `*.__tmp__` file fails: the last step of a single-file commit. */
+class FailingCommitFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failmv:///")
+  override def getScheme: String = "failmv"
+  override def rename(src: Path, dst: Path): Boolean =
+    !src.getName.endsWith(".__tmp__") && super.rename(src, dst)
 }

@@ -12,7 +12,7 @@ class SinksSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  private lazy val root = java.nio.file.Files.createTempDirectory("graft_sinks_").toString
+  private lazy val root = TestSpark.tmpDir("graft_sinks_").toString
   private lazy val src = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
 
   test("parquet round-trip preserves rows and schema") {

@@ -39,7 +39,7 @@ class TypeWideningSpec extends AnyFunSuite {
 
   test("CSV export renders timestamps ISO-8601, not the reference's Some(...) quirk") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_tsfmt_").toString
+    val root = TestSpark.tmpDir("graft_tsfmt_").toString
     Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 12:30:00")))
       .toDF("id", "ts").coalesce(1).write.parquet(s"$root/src")
     Merge.exportCsv(spark, s"$root/src", s"$root/csv")

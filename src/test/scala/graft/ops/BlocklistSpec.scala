@@ -98,7 +98,7 @@ class BlocklistSpec extends AnyFunSuite {
     assert(oneShot.count() > 0 && oneShot.count() < unblockedCount,
       "the block must bite without emptying the result")
     val results = Seq(1, 2).map { filesPerTrigger =>
-      val base = java.nio.file.Files.createTempDirectory("graft_blk_ingest_")
+      val base = TestSpark.tmpDir("graft_blk_ingest_")
       docs.repartition(4, col("doc_id"))
         .write.mode("overwrite").parquet(s"$base/in")
       val q = graft.streaming.DedupStream.lshIngest(spark, s"$base/in",

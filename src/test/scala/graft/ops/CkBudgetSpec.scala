@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{QueryDef, Runner, TestSpark}
+import graft.{RegistrySweep, TestSpark}
 
 /** Enforces the safety argument in [[Pin.checkpointed]]'s Scaladoc
   * (r11 VERDICT item 3 / ADVICE): the KeepCk=6 deque force-unpersists
@@ -20,17 +20,13 @@ import graft.{QueryDef, Runner, TestSpark}
 class CkBudgetSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
-  private val sf = "/root/testdata/sf0.001"
 
   test("no query keeps more than KeepCk/2 = 3 localCheckpoints live at once") {
-    val over = Runner.select(None).flatMap {
-      case QueryDef(name, _, fn) =>
-        Pin.resetBudget()
-        // eager checkpoints (and loop-kernel create/release cycles)
-        // run during plan construction
-        fn(spark, sf)
-        val n = Pin.maxCkLiveSinceReset
-        if (n > 3) Some(s"$name held $n checkpoints live") else None
+    // eager checkpoints (and loop-kernel create/release cycles) run
+    // during plan construction: the sweep reads the high-water mark
+    // before any action on the frame
+    val over = RegistrySweep.offenders { (_, f) =>
+      Option.when(f.maxCkLive > 3)(s"held ${f.maxCkLive} checkpoints live")
     }
     assert(over.isEmpty, s"queries exceeding the checkpoint budget: $over")
   }

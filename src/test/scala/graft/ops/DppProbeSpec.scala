@@ -17,7 +17,7 @@ class DppProbeSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val centroids = vectors.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val path = java.nio.file.Files.createTempDirectory("graft_dpp_").toString + "/index"
+    val path = TestSpark.tmpDir("graft_dpp_").toString + "/index"
     VectorOps.writeIvfIndex(vectors, centroids, path)
 
     val probes = VectorOps.assignClusters(vectors, centroids)

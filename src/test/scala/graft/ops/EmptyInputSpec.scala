@@ -36,22 +36,19 @@ class EmptyInputSpec extends AnyFunSuite {
     // are quiet must probe EMPTY, not throw on schema inference
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ei_ti_").toString + "/index"
+    val dir = TestSpark.tmpDir("graft_ei_ti_").toString + "/index"
     TextIndex.buildTextIndex(docs, dir)
     val qt = TextIndex.queryTerms(docs, 42)
     val before = TextIndex.probeTextIndex(spark, dir, qt, 10).collect().toSeq
     TextIndex.appendTextIndex(emptyDocs, dir, batch = 1L)
     val after = TextIndex.probeTextIndex(spark, dir, qt, 10).collect().toSeq
     assert(after == before, "an empty append must not move any answer")
-    val emptyIdx = java.nio.file.Files
-      .createTempDirectory("graft_ei_ti0_").toString + "/index"
+    val emptyIdx = TestSpark.tmpDir("graft_ei_ti0_").toString + "/index"
     TextIndex.buildTextIndex(emptyDocs, emptyIdx)
     assert(TextIndex.probeTextIndex(spark, emptyIdx, qt, 10).count() == 0)
     // re-version with an EMPTY edit set is the identity (empty
     // tombstones + empty append through a fresh snapshot)
-    val noop = java.nio.file.Files
-      .createTempDirectory("graft_ei_ti_rev_").toString + "/index"
+    val noop = TestSpark.tmpDir("graft_ei_ti_rev_").toString + "/index"
     TextIndex.reVersionTextIndex(spark, emptyDocs, emptyDocs, dir, noop)
     assert(TextIndex.probeTextIndex(spark, noop, qt, 10)
       .collect().toSeq == before, "empty re-version must not move any answer")

@@ -32,7 +32,7 @@ class IncrementalLshSpec extends AnyFunSuite {
     .select((col("doc_id") + lit(500000L)).as("doc_id"), col("text"))
 
   test("probe result equals the one-shot kernel restricted to batch-involving pairs") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ilsh_").toString
+    val tmp = TestSpark.tmpDir("graft_ilsh_").toString
     DedupOps.writePortableLshIndex(lake, "ilsh_spec_index", s"$tmp/index")
     val probed = DedupOps.lshIndexProbe(batch, spark.table("ilsh_spec_index"),
       lake.unionByName(batch))
@@ -49,7 +49,7 @@ class IncrementalLshSpec extends AnyFunSuite {
   }
 
   test("bucketed index side joins with zero Exchange whatever the join strategy") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ilsh_plan_").toString
+    val tmp = TestSpark.tmpDir("graft_ilsh_plan_").toString
     DedupOps.writePortableLshIndex(lake, "ilsh_plan_index", s"$tmp/index")
     // force the sort-merge path (the large-batch regime; a small batch
     // broadcasts, where the index trivially never shuffles)
@@ -93,7 +93,7 @@ class IncrementalLshSpec extends AnyFunSuite {
   }
 
   test("empty batch probes to an empty result, not an error") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ilsh_empty_").toString
+    val tmp = TestSpark.tmpDir("graft_ilsh_empty_").toString
     DedupOps.writePortableLshIndex(lake, "ilsh_empty_index", s"$tmp/index")
     val none = batch.filter(col("doc_id") < 0)
     val probed = DedupOps.lshIndexProbe(none, spark.table("ilsh_empty_index"),

@@ -28,7 +28,7 @@ class IvfDeleteSpec extends AnyFunSuite {
   private lazy val survivors = vectors.filter(col("vec_id") % 7 =!= 0)
 
   private def newIndex(prefix: String): String = {
-    val path = java.nio.file.Files.createTempDirectory(prefix).toString + "/idx"
+    val path = TestSpark.tmpDir(prefix).toString + "/idx"
     VectorOps.writeIvfIndex(vectors, centroids, path)
     path
   }
@@ -58,8 +58,7 @@ class IvfDeleteSpec extends AnyFunSuite {
     VectorOps.tombstoneIvfDelete(removed, centroids, path)
     assert(allFiles(path) == before, "delete must not touch index files")
 
-    val rebuilt = java.nio.file.Files
-      .createTempDirectory("graft_ivfdel_ref_").toString + "/idx"
+    val rebuilt = TestSpark.tmpDir("graft_ivfdel_ref_").toString + "/idx"
     VectorOps.writeIvfIndex(survivors, centroids, rebuilt)
 
     val mor = rows(VectorOps.probeIvfIndex(spark, path, probes, k = 3))
@@ -127,8 +126,7 @@ class IvfDeleteSpec extends AnyFunSuite {
     val newV = removed.select(col("vec_id"), reverse(col("v")).as("v"))
     VectorOps.reversionIvfIndex(spark, removed, newV, centroids, path)
 
-    val rebuilt = java.nio.file.Files
-      .createTempDirectory("graft_ivfdel_rev_ref_").toString + "/idx"
+    val rebuilt = TestSpark.tmpDir("graft_ivfdel_rev_ref_").toString + "/idx"
     VectorOps.writeIvfIndex(survivors.unionByName(newV), centroids, rebuilt)
     val updated = rows(VectorOps.probeIvfIndex(spark, path, probes, k = 3))
     assert(updated == rows(VectorOps.probeIvfIndex(spark, rebuilt, probes, k = 3)))
@@ -155,16 +153,14 @@ class IvfDeleteSpec extends AnyFunSuite {
     // disjoint vec_ids, so expiring old batch dirs is O(1) metadata
     // and the two-level probe over the survivors must equal a rebuilt
     // survivor index
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_ivf_ret_").toString + "/idx"
+    val store = TestSpark.tmpDir("graft_ivf_ret_").toString + "/idx"
     (0 until 3).foreach(i =>
       VectorOps.assignClusters(
           vectors.filter(pmod(col("vec_id"), lit(3)) === i), centroids)
         .write.partitionBy("cid").parquet(s"$store/batch=$i"))
     DedupOps.expireShards(spark, store, "batch", cutoff = 1)
 
-    val rebuilt = java.nio.file.Files
-      .createTempDirectory("graft_ivf_ret_ref_").toString + "/idx"
+    val rebuilt = TestSpark.tmpDir("graft_ivf_ret_ref_").toString + "/idx"
     VectorOps.writeIvfIndex(
       vectors.filter(pmod(col("vec_id"), lit(3)) =!= 0), centroids, rebuilt)
     assert(rows(VectorOps.probeIvfIndex(spark, store, probes, k = 3)) ==

@@ -49,7 +49,7 @@ class IvfIndexSpec extends AnyFunSuite {
   }
 
   test("writeIvfIndex partitions by cluster; probe scan prunes partitions") {
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_").toString + "/index"
+    val path = TestSpark.tmpDir("graft_ivf_").toString + "/index"
     VectorOps.writeIvfIndex(vectors, centroids, path)
 
     // the layout is one directory per cell
@@ -81,7 +81,7 @@ class IvfIndexSpec extends AnyFunSuite {
   }
 
   test("appendIvfIndex: batch lands in its cells, untouched cells' files unchanged, probes see it") {
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_app_").toString + "/index"
+    val path = TestSpark.tmpDir("graft_ivf_app_").toString + "/index"
     val base = vectors.filter(col("vec_id") < 480)
     val batch = vectors.filter(col("vec_id") >= 480)
     VectorOps.writeIvfIndex(base, centroids, path)

@@ -66,7 +66,7 @@ class LshDeleteSpec extends AnyFunSuite {
     // to batch-involving pairs (removed sources must NOT pair)
     val batch = lake.filter(col("doc_id") % 6 === 0)
       .select((col("doc_id") + lit(500000L)).as("doc_id"), col("text"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lshdel_").toString
+    val tmp = TestSpark.tmpDir("graft_lshdel_").toString
     DedupOps.writeLshIndexRows(
       DedupOps.lshIndexDelete(
         DedupOps.lshBandIndex(lake), DedupOps.lshBandIndex(removed)),
@@ -86,7 +86,7 @@ class LshDeleteSpec extends AnyFunSuite {
   }
 
   test("bucketed index side of the delete join has zero Exchange") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lshdel_plan_").toString
+    val tmp = TestSpark.tmpDir("graft_lshdel_plan_").toString
     DedupOps.writePortableLshIndex(lake, "lshdel_plan_index", s"$tmp/index")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -70,7 +70,7 @@ class LshUpsertSpec extends AnyFunSuite {
   test("probe after update-and-persist equals the one-shot kernel over the edited lake") {
     val batch = lake.filter(col("doc_id") % 6 === 0)
       .select((col("doc_id") + lit(500000L)).as("doc_id"), col("text"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lshups_").toString
+    val tmp = TestSpark.tmpDir("graft_lshups_").toString
     DedupOps.writeLshIndexRows(
       DedupOps.lshIndexUpsert(DedupOps.lshBandIndex(lake),
         DedupOps.lshBandIndex(oldU), DedupOps.lshBandIndex(newU)),
@@ -85,7 +85,7 @@ class LshUpsertSpec extends AnyFunSuite {
   }
 
   test("bucketed index side of the upsert joins has zero Exchange") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lshups_plan_").toString
+    val tmp = TestSpark.tmpDir("graft_lshups_plan_").toString
     DedupOps.writePortableLshIndex(lake, "lshups_plan_index", s"$tmp/index")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, TestSpark}
+import graft.{RegistrySweep, SparkEntry, TestSpark}
 
 /** Every registered query runs at sf0.001 and returns sane output; the
   * DuckDB value-level check is the driver's t2 gate (scripts/check.py
@@ -14,12 +14,7 @@ class OpsSpec extends AnyFunSuite {
 
   // Queries whose correct result can be empty at some SF: none today.
   test("all registered queries execute at sf0.001 with rows > 0") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try {
-        val n = fn(spark, sf).count()
-        if (n > 0) None else Some(s"$name: 0 rows")
-      } catch { case e: Exception => Some(s"$name: ${e.getMessage}") }
-    }
+    val failures = RegistrySweep.offenders { (_, f) => Option.when(f.rows <= 0)("0 rows") }
     assert(failures.isEmpty, failures.mkString("; "))
   }
 

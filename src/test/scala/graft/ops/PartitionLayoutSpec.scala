@@ -1,6 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,7 +16,7 @@ class PartitionLayoutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("day-partitioned events: day filters prune to the matching partitions") {
-    val path = Files.createTempDirectory("graft_daypart_").resolve("events").toString
+    val path = TestSpark.tmpDir("graft_daypart_").resolve("events").toString
     val ev = graft.Tables.events(spark, "/root/testdata/sf0.001")
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
     ev.write.partitionBy("day").mode("overwrite").parquet(path)

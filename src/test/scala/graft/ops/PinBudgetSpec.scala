@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{QueryDef, Runner, TestSpark}
+import graft.{RegistrySweep, TestSpark}
 
 /** Enforces the sizing argument in [[Pin]]'s Scaladoc: `Keep` = 6 is
   * safe only while no single query pins more than `Keep` frames —
@@ -14,15 +14,12 @@ import graft.{QueryDef, Runner, TestSpark}
 class PinBudgetSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
-  private val sf = "/root/testdata/sf0.001"
 
   test("no query performs more than Keep=6 Pin.once calls") {
-    val over = Runner.select(None).flatMap {
-      case QueryDef(name, _, fn) =>
-        Pin.resetBudget()
-        fn(spark, sf) // pins happen during plan construction
-        val n = Pin.pinsSinceReset
-        if (n > 6) Some(s"$name pinned $n frames") else None
+    // pins happen during plan construction: the sweep reads the count
+    // before any action on the frame
+    val over = RegistrySweep.offenders { (_, f) =>
+      Option.when(f.pins > 6)(s"pinned ${f.pins} frames")
     }
     assert(over.isEmpty, s"queries exceeding the Pin budget: $over")
   }

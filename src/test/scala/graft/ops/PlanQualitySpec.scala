@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, TestSpark}
+import graft.{RegistrySweep, SparkEntry, TestSpark}
 
 /** Plan-quality regression guard: the properties verified by hand via
   * graft.Explain, frozen as assertions. A future edit that silently
@@ -47,8 +47,8 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("no query plans a CartesianProduct") {
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.filter { n =>
-      plan(n).contains("CartesianProduct")
+    val offenders = RegistrySweep.offenders { (_, f) =>
+      Option.when(f.plan.contains("CartesianProduct"))("CartesianProduct")
     }
     assert(offenders.isEmpty, s"cartesian products in: $offenders")
   }
@@ -142,8 +142,9 @@ class PlanQualitySpec extends AnyFunSuite {
       // pp10/mm15: sp19's packing-census shape — the 1-row broadcast
       // (total tokens/cost, n_bins) cross into the census rollup
       "pp10_tokenizer_pipeline", "mm15_vlm_packing")
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.filter { n =>
-      !allowed(n) && plan(n).contains("BroadcastNestedLoopJoin")
+    val offenders = RegistrySweep.offenders { (n, f) =>
+      Option.when(!allowed(n) && f.plan.contains("BroadcastNestedLoopJoin"))(
+        "BroadcastNestedLoopJoin")
     }
     assert(offenders.isEmpty, s"unexpected BNLJ in: $offenders")
   }
@@ -215,11 +216,9 @@ class PlanQualitySpec extends AnyFunSuite {
       "q62_recursive_cte", "ev42_session_histogram")
     // detection logic lives in the library itself (PlanAudit
     // .unpartitionedWindows) so users can lint their own plans
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (n, _) => allowed(n) }
-      .filter { case (_, fn) =>
-        PlanAudit.unpartitionedWindows(fn(spark, sf)).nonEmpty }
-      .map(_._1)
+    val offenders = RegistrySweep.offenders { (n, f) =>
+      if (allowed(n)) Nil else f.unpartitionedWindows
+    }
     assert(offenders.isEmpty, s"unpartitioned windows in: $offenders")
   }
 
@@ -231,17 +230,14 @@ class PlanQualitySpec extends AnyFunSuite {
     // and Pin's InMemory cache nodes) and require requiredSchema <
     // full width on every >=5-column table. One allowlisted full-width
     // scan exists in the whole engine: q15's scalar-function showcase
-    // genuinely computes over all 6 part columns.
-    val widths = Map("customer" -> 5, "part" -> 6, "orders" -> 6,
-      "lineitem" -> 11, "events" -> 6, "documents" -> 5)
+    // genuinely computes over all 6 part columns. The table widths are
+    // RegistrySweep.tableWidths.
     val allowed = Set(("q15_scalar_funcs", "part"))
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        PlanAudit.fullWidthScans(fn(spark, sf), widths)
-          .filter(_.contains("/root/testdata/"))
-          .filterNot(line => allowed.exists { case (q, t) =>
-            q == name && line.startsWith(s"$t ") })
-          .map(line => s"$name: $line")
+    val offenders = RegistrySweep.offenders { (name, f) =>
+      f.fullWidthScans
+        .filter(_.contains("/root/testdata/"))
+        .filterNot(line => allowed.exists { case (q, t) =>
+          q == name && line.startsWith(s"$t ") })
     }
     assert(offenders.isEmpty, s"unpruned scans: $offenders")
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkEntry
+import graft.{SparkEntry, TestSpark}
 import graft.core.Session
 
 import org.apache.spark.sql.DataFrame
@@ -48,7 +48,7 @@ object ProbeR12 {
           graft.functions.GraftFunctions.md5_low60(col("term")).as("th"))
       time("tokenize+explode+md5hash")(noop(hashed))
       time("postingsOf (adds groupBy tf)")(noop(TextIndex.postingsOf(docs)))
-      val outDir = java.nio.file.Files.createTempDirectory("probe_txidx_").toString
+      val outDir = TestSpark.tmpDir("probe_txidx_").toString
       time("full append (adds pqt write)") {
         TextIndex.postingsOf(docs).write.mode("overwrite")
           .partitionBy("tp").parquet(s"$outDir/postings/batch=0")

@@ -23,7 +23,7 @@ class RetentionSpec extends AnyFunSuite {
   private def day(i: Int) = lake.filter(pmod(col("doc_id"), lit(days)) === i)
 
   private def writeStore(prefix: String): String = {
-    val store = java.nio.file.Files.createTempDirectory(prefix).toString + "/shards"
+    val store = TestSpark.tmpDir(prefix).toString + "/shards"
     (0 until days).foreach(i =>
       DedupOps.lshBandIndex(day(i)).write.parquet(s"$store/day=$i"))
     store

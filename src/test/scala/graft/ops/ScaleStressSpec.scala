@@ -439,8 +439,7 @@ class ScaleStressSpec extends AnyFunSuite {
     val big = (0 until 10).map(i => docs.select(
         (col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text")))
       .reduce(_ unionByName _)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sss_txtidx_").toString + "/index"
+    val dir = TestSpark.tmpDir("graft_sss_txtidx_").toString + "/index"
     TextIndex.buildTextIndex(big, dir)
     val probe = TextIndex.probeTextIndex(spark, dir,
       TextIndex.queryTerms(docs, 42), k = 10)

@@ -62,7 +62,7 @@ class ShardedProbeSpec extends AnyFunSuite {
   }
 
   test("compaction rebuilds the one-shot index exactly and preserves probe answers") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact_")
+    val base = TestSpark.tmpDir("graft_compact_")
     (0 until 3).foreach { i =>
       DedupOps.lshBandIndex(lake.filter(col("doc_id") % 3 === i))
         .write.mode("overwrite").parquet(s"$base/shards/batch=$i")

@@ -19,7 +19,7 @@ class TextIndexSpec extends AnyFunSuite {
     .select("doc_id", "text")
 
   private def fresh(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString + "/index"
+    TestSpark.tmpDir(tag).toString + "/index"
 
   private def probe(dir: String, qid: Long,
       tombs: Option[String] = None): DataFrame =

@@ -1,6 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +14,7 @@ class UpsertSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("mergeInto updates existing keys, inserts new ones, leaves the rest") {
-    val path = Files.createTempDirectory("graft_upsert_").resolve("t").toString
+    val path = TestSpark.tmpDir("graft_upsert_").resolve("t").toString
     val base = (1L to 100L).map(i => (i, s"v$i")).toDF("id", "payload")
     Upsert.writeBucketed(base, path, "id", nBuckets = 8)
 
@@ -33,7 +32,7 @@ class UpsertSpec extends AnyFunSuite {
   }
 
   test("untouched buckets are not rewritten (file mtimes unchanged)") {
-    val path = Files.createTempDirectory("graft_upsert_prune_").resolve("t").toString
+    val path = TestSpark.tmpDir("graft_upsert_prune_").resolve("t").toString
     val base = (1L to 200L).map(i => (i, s"v$i")).toDF("id", "payload")
     Upsert.writeBucketed(base, path, "id", nBuckets = 8)
 
@@ -60,7 +59,7 @@ class UpsertSpec extends AnyFunSuite {
   }
 
   test("a key only ever lives in one bucket (deterministic hash routing)") {
-    val path = Files.createTempDirectory("graft_upsert_route_").resolve("t").toString
+    val path = TestSpark.tmpDir("graft_upsert_route_").resolve("t").toString
     Upsert.writeBucketed((1L to 50L).map(i => (i, "a")).toDF("id", "p"), path, "id", 4)
     // update the same keys twice; count must stay stable (no dup across buckets)
     Upsert.mergeInto(spark, path, (1L to 50L).map(i => (i, "b")).toDF("id", "p"), "id", 4)

@@ -1,6 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -42,8 +41,8 @@ class ZorderSpec extends AnyFunSuite {
 
   test("z-order layout prunes range filters on both dimensions; single-sort does not") {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    val zdir = Files.createTempDirectory("graft_zorder_").resolve("z").toString
-    val ldir = Files.createTempDirectory("graft_zorder_").resolve("lin").toString
+    val zdir = TestSpark.tmpDir("graft_zorder_").resolve("z").toString
+    val ldir = TestSpark.tmpDir("graft_zorder_").resolve("lin").toString
 
     // sf0.001 domains: l_partkey 0..199 (8 bits), l_suppkey 0..9
     // (4 bits). Scale suppkey ×16 so its top bit aligns with

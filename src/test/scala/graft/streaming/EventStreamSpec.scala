@@ -14,7 +14,7 @@ class EventStreamSpec extends AnyFunSuite {
 
   /** File streaming sources need a DIRECTORY of files. */
   private lazy val streamDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_")
+    val dir = TestSpark.tmpDir("graft_stream_")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       dir.resolve("events.parquet"))
@@ -25,7 +25,7 @@ class EventStreamSpec extends AnyFunSuite {
     // ADVICE r4: the footer probe threw on an empty dir, so a stream
     // could not be started ahead of its data. Start on empty, then drop
     // the file in and expect rows.
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_empty_")
+    val dir = TestSpark.tmpDir("graft_stream_empty_")
     val stream = EventStream.readEvents(spark, dir.toString)
     val q = EventStream.hourlyCounts(stream)
       .writeStream.outputMode("append").format("memory").queryName("from_empty").start()
@@ -139,7 +139,7 @@ class EventStreamSpec extends AnyFunSuite {
 
   test("sessionize survives late out-of-order events across microbatches") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_late_")
+    val dir = TestSpark.tmpDir("graft_stream_late_")
     def ts(m: Long) = new java.sql.Timestamp(1704067200000L + m * 60000L)
     // batch files processed one per trigger: file 1 advances the
     // watermark well past file 2's (late) events
@@ -175,7 +175,7 @@ class EventStreamSpec extends AnyFunSuite {
 
   test("dedupStream: duplicated source collapses to distinct events") {
     // stage the SAME file twice: every event arrives twice
-    val dupDir = java.nio.file.Files.createTempDirectory("graft_stream_dup_")
+    val dupDir = TestSpark.tmpDir("graft_stream_dup_")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"), dupDir.resolve("a.parquet"))
     java.nio.file.Files.copy(
@@ -211,7 +211,7 @@ class EventStreamSpec extends AnyFunSuite {
   test("nearDupStream: near-identical texts collapse to one per fingerprint") {
     // stage the same file twice → every record's text arrives at least
     // twice; whitespace/case variants also share a fingerprint
-    val dupDir = java.nio.file.Files.createTempDirectory("graft_stream_neardup_")
+    val dupDir = TestSpark.tmpDir("graft_stream_neardup_")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"), dupDir.resolve("a.parquet"))
     java.nio.file.Files.copy(

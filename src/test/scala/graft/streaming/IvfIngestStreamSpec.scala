@@ -31,7 +31,7 @@ class IvfIngestStreamSpec extends AnyFunSuite {
   /** Run the ingest with the corpus staged as `nFiles` landing files,
     * `filesPerTrigger` per micro-batch; return the sharded index dir. */
   private def ingest(nFiles: Int, filesPerTrigger: Int): String = {
-    val base = java.nio.file.Files.createTempDirectory("graft_ivf_spec_")
+    val base = TestSpark.tmpDir("graft_ivf_spec_")
     raw.repartition(nFiles, col("vec_id"))
       .write.mode("overwrite").parquet(s"$base/in")
     val q = VectorStream.ivfIngest(spark, s"$base/in", raw.schema, centroids,
@@ -62,12 +62,10 @@ class IvfIngestStreamSpec extends AnyFunSuite {
         col("cid").as("pcid"))
     val viaShards = VectorOps.probeIvfIndex(spark, idxDir, probes, k = 3)
     assert(viaShards.count() == 15, "5 probes x top-3")
-    val compacted = java.nio.file.Files
-      .createTempDirectory("graft_ivf_compact_").resolve("idx").toString
+    val compacted = TestSpark.tmpDir("graft_ivf_compact_").resolve("idx").toString
     VectorOps.compactIvfIndex(spark, idxDir, compacted)
     val viaCompacted = VectorOps.probeIvfIndex(spark, compacted, probes, k = 3)
-    val oneShotDir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_oneshot_").resolve("idx").toString
+    val oneShotDir = TestSpark.tmpDir("graft_ivf_oneshot_").resolve("idx").toString
     VectorOps.writeIvfIndex(emb, centroids, oneShotDir)
     val viaOneShot = VectorOps.probeIvfIndex(spark, oneShotDir, probes, k = 3)
     for ((other, name) <- Seq((viaCompacted, "compacted"), (viaOneShot, "one-shot"))) {
@@ -78,7 +76,7 @@ class IvfIngestStreamSpec extends AnyFunSuite {
 
   test("TTL'd ingest: store bounded at keepBatches shards; survivors == rebuild") {
     // the st17/TextIngestStreamSpec boundedness pin, vector side
-    val base = java.nio.file.Files.createTempDirectory("graft_ivfttl_spec_")
+    val base = TestSpark.tmpDir("graft_ivfttl_spec_")
     val in = base.resolve("in")
     java.nio.file.Files.createDirectories(in)
     (0L to 3L).foreach { b =>
@@ -105,8 +103,7 @@ class IvfIngestStreamSpec extends AnyFunSuite {
       .select(col("vec_id").as("probe_id"), col("v").as("pv"),
         col("cid").as("pcid"))
     val viaTtl = VectorOps.probeIvfIndex(spark, s"$base/idx", probes, k = 3)
-    val rebuilt = java.nio.file.Files
-      .createTempDirectory("graft_ivfttl_ref_").resolve("idx").toString
+    val rebuilt = TestSpark.tmpDir("graft_ivfttl_ref_").resolve("idx").toString
     VectorOps.writeIvfIndex(emb.filter(col("vec_id") % 4 >= 2),
       centroids, rebuilt)
     val viaRebuild = VectorOps.probeIvfIndex(spark, rebuilt, probes, k = 3)

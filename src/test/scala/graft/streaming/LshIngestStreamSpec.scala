@@ -26,7 +26,7 @@ class LshIngestStreamSpec extends AnyFunSuite {
   /** Run the ingest over the corpus staged as `nFiles` landing files,
     * `filesPerTrigger` per micro-batch; return the accumulated pairs. */
   private def ingest(nFiles: Int, filesPerTrigger: Int): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_ingest_spec_")
+    val base = TestSpark.tmpDir("graft_ingest_spec_")
     docs.repartition(nFiles, col("doc_id"))
       .write.mode("overwrite").parquet(s"$base/in")
     val q = DedupStream.lshIngest(spark, s"$base/in", docs.schema,
@@ -61,7 +61,7 @@ class LshIngestStreamSpec extends AnyFunSuite {
   }
 
   test("the index store holds each doc's postings exactly once") {
-    val base = java.nio.file.Files.createTempDirectory("graft_ingest_idx_")
+    val base = TestSpark.tmpDir("graft_ingest_idx_")
     docs.repartition(3, col("doc_id"))
       .write.mode("overwrite").parquet(s"$base/in")
     val q = DedupStream.lshIngest(spark, s"$base/in", docs.schema,

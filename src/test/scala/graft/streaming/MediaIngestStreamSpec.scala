@@ -28,7 +28,7 @@ class MediaIngestStreamSpec extends AnyFunSuite {
   /** Stage the lake as `nFiles` landing files, ingest `filesPerTrigger`
     * per micro-batch, return the consolidated accumulated index. */
   private def ingest(nFiles: Int, filesPerTrigger: Int): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_media_ingest_")
+    val base = TestSpark.tmpDir("graft_media_ingest_")
     assets.repartition(nFiles, col("doc_id"))
       .write.mode("overwrite").parquet(s"$base/in")
     val q = MediaStream.payloadIngest(spark, s"$base/in",
@@ -59,7 +59,7 @@ class MediaIngestStreamSpec extends AnyFunSuite {
   }
 
   test("each asset's band postings land in exactly one shard") {
-    val base = java.nio.file.Files.createTempDirectory("graft_media_idx_")
+    val base = TestSpark.tmpDir("graft_media_idx_")
     assets.repartition(3, col("doc_id"))
       .write.mode("overwrite").parquet(s"$base/in")
     val q = MediaStream.payloadIngest(spark, s"$base/in",

@@ -15,12 +15,12 @@ class MergeStreamSpec extends AnyFunSuite {
 
   test("continuousMerge drains a folder, then appends only new files on re-run") {
     import spark.implicits._
-    val in = Files.createTempDirectory("graft_cmerge_in_")
-    val out = Files.createTempDirectory("graft_cmerge_out_").resolve("merged")
-    val ckpt = Files.createTempDirectory("graft_cmerge_ckpt_")
+    val in = TestSpark.tmpDir("graft_cmerge_in_")
+    val out = TestSpark.tmpDir("graft_cmerge_out_").resolve("merged")
+    val ckpt = TestSpark.tmpDir("graft_cmerge_ckpt_")
 
     def writeFile(name: String, ids: Seq[Long]): Unit = {
-      val tmp = Files.createTempDirectory("graft_cmerge_stage_")
+      val tmp = TestSpark.tmpDir("graft_cmerge_stage_")
       ids.toDF("id").coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .find(_.getName.endsWith(".parquet")).get

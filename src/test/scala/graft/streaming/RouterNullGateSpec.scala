@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,9 +19,9 @@ class RouterNullGateSpec extends AnyFunSuite {
 
   test("NULL-gated rows route to quarantine; the two stores partition the input exactly") {
     import spark.implicits._
-    val in = Files.createTempDirectory("graft_nullgate_in_")
-    val base = Files.createTempDirectory("graft_nullgate_out_")
-    val ck = Files.createTempDirectory("graft_nullgate_ck_")
+    val in = TestSpark.tmpDir("graft_nullgate_in_")
+    val base = TestSpark.tmpDir("graft_nullgate_out_")
+    val ck = TestSpark.tmpDir("graft_nullgate_ck_")
 
     // one clearly-accepted doc, one clearly-rejected, one NULL text
     val keepText = ("the quick brown fox jumps over the lazy dog and " * 3).trim

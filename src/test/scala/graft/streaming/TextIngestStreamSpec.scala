@@ -22,17 +22,14 @@ class TextIngestStreamSpec extends AnyFunSuite {
       TextIndex.queryTerms(docs, 42), k = 10)
 
   test("ingest sliced into many micro-batches == one-shot build") {
-    val landing = java.nio.file.Files
-      .createTempDirectory("graft_tis_landing_").toString
+    val landing = TestSpark.tmpDir("graft_tis_landing_").toString
     docs.repartition(4, col("doc_id"))
       .write.mode("overwrite").parquet(s"$landing/in")
     val schema = spark.read.parquet(s"$landing/in").schema
 
     def ingest(fpt: Int): String = {
-      val base = java.nio.file.Files
-        .createTempDirectory(s"graft_tis_idx${fpt}_").toString
-      val ck = java.nio.file.Files
-        .createTempDirectory(s"graft_tis_ck${fpt}_").toString
+      val base = TestSpark.tmpDir(s"graft_tis_idx${fpt}_").toString
+      val ck = TestSpark.tmpDir(s"graft_tis_ck${fpt}_").toString
       val q = TextIndexStream.textIngest(spark, s"$landing/in", schema,
         s"$base/index", ck, filesPerTrigger = fpt)
       q.awaitTermination()
@@ -41,8 +38,7 @@ class TextIngestStreamSpec extends AnyFunSuite {
 
     val fine = ingest(1)   // one batch per file
     val coarse = ingest(64) // everything in one batch
-    val oneShot = java.nio.file.Files
-      .createTempDirectory("graft_tis_oneshot_").toString + "/index"
+    val oneShot = TestSpark.tmpDir("graft_tis_oneshot_").toString + "/index"
     TextIndex.buildTextIndex(docs, oneShot)
 
     val ref = probe(oneShot).collect().toSeq
@@ -53,12 +49,11 @@ class TextIngestStreamSpec extends AnyFunSuite {
   }
 
   test("TTL'd ingest: store size stays bounded by the window; survivors == rebuild") {
-    val landing = java.nio.file.Files
-      .createTempDirectory("graft_ttl_landing_").toString
+    val landing = TestSpark.tmpDir("graft_ttl_landing_").toString
     val in = java.nio.file.Paths.get(landing, "in")
     java.nio.file.Files.createDirectories(in)
     (0L to 3L).foreach { b =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_ttl_st$b")
+      val tmp = TestSpark.tmpDir(s"graft_ttl_st$b")
       docs.filter(pmod(col("doc_id"), lit(4)) === b)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
@@ -69,10 +64,8 @@ class TextIngestStreamSpec extends AnyFunSuite {
         java.nio.file.attribute.FileTime.fromMillis(1600000000000L + b * 60000))
     }
     val schema = spark.read.parquet(in.toString).schema
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_ttl_idx_").toString
-    val ck = java.nio.file.Files
-      .createTempDirectory("graft_ttl_ck_").toString
+    val base = TestSpark.tmpDir("graft_ttl_idx_").toString
+    val ck = TestSpark.tmpDir("graft_ttl_ck_").toString
     val q = TextIndexStream.textIngestWithRetention(spark, in.toString,
       schema, s"$base/index", ck, keepBatches = 2, filesPerTrigger = 1)
     q.awaitTermination()
@@ -83,8 +76,7 @@ class TextIngestStreamSpec extends AnyFunSuite {
         .map(_.getName).filter(_.startsWith("batch=")).toSet
     assert(shards("postings") == Set("batch=2", "batch=3"), shards("postings"))
     assert(shards("stats") == Set("batch=2", "batch=3"), shards("stats"))
-    val rebuilt = java.nio.file.Files
-      .createTempDirectory("graft_ttl_ref_").toString + "/index"
+    val rebuilt = TestSpark.tmpDir("graft_ttl_ref_").toString + "/index"
     TextIndex.buildTextIndex(docs.filter(col("doc_id") % 4 >= 2), rebuilt)
     assert(probe(s"$base/index").collect().toSeq ==
       probe(rebuilt).collect().toSeq,
@@ -96,16 +88,14 @@ class TextIngestStreamSpec extends AnyFunSuite {
     // probeTextIndexMulti plan and (b) streamed 1 file per trigger in
     // 3 files of 2 — the accumulated answers must be identical, the
     // slicing-invariance contract of textServe
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_serve_idx_").toString + "/index"
+    val base = TestSpark.tmpDir("graft_serve_idx_").toString + "/index"
     TextIndex.buildTextIndex(docs, base)
     val pred = col("doc_id").between(10, 15)
     val oneShot = TextIndex.probeTextIndexMulti(spark, base,
       TextIndex.queryTermsMulti(docs, pred), k = 4)
       .collect().map(_.toSeq).toSet
 
-    val landing = java.nio.file.Files
-      .createTempDirectory("graft_serve_in_")
+    val landing = TestSpark.tmpDir("graft_serve_in_")
     Seq((0L, 10L, 11L), (1L, 12L, 13L), (2L, 14L, 15L)).foreach {
       case (b, lo, hi) =>
         val tmp = java.nio.file.Files.createTempDirectory(landing, s"s$b")
@@ -122,10 +112,8 @@ class TextIngestStreamSpec extends AnyFunSuite {
     }
     val in = landing.resolve("in").toString
     val schema = spark.read.parquet(in).schema
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_serve_res_").toString + "/res"
-    val ck = java.nio.file.Files
-      .createTempDirectory("graft_serve_ck_").toString
+    val out = TestSpark.tmpDir("graft_serve_res_").toString + "/res"
+    val ck = TestSpark.tmpDir("graft_serve_ck_").toString
     val q = TextIndexStream.textServe(spark, in, schema, base, out, ck,
       k = 4, filesPerTrigger = 1)
     q.awaitTermination()

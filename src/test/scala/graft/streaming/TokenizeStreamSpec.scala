@@ -18,8 +18,7 @@ class TokenizeStreamSpec extends AnyFunSuite {
     .select("doc_id", "text")
 
   test("stream tokenization sliced 1/64 files per trigger == batch apply") {
-    val landing = java.nio.file.Files
-      .createTempDirectory("graft_tok_landing_").toString
+    val landing = TestSpark.tmpDir("graft_tok_landing_").toString
     docs.repartition(4, col("doc_id"))
       .write.mode("overwrite").parquet(s"$landing/in")
     val schema = spark.read.parquet(s"$landing/in").schema
@@ -29,10 +28,8 @@ class TokenizeStreamSpec extends AnyFunSuite {
     assert(merges.nonEmpty, "a real corpus must yield merges")
 
     def run(fpt: Int): Seq[(Long, Long, Long)] = {
-      val out = java.nio.file.Files
-        .createTempDirectory(s"graft_tok_out${fpt}_").toString
-      val ck = java.nio.file.Files
-        .createTempDirectory(s"graft_tok_ck${fpt}_").toString
+      val out = TestSpark.tmpDir(s"graft_tok_out${fpt}_").toString
+      val ck = TestSpark.tmpDir(s"graft_tok_ck${fpt}_").toString
       val q = TokenizeStream.tokenizeIngest(spark, s"$landing/in", schema,
         merges, s"$out/res", ck, filesPerTrigger = fpt)
       q.awaitTermination()

@@ -18,15 +18,15 @@ class UpsertStreamSpec extends AnyFunSuite {
 
   test("upsertStream applies change batches with last-writer-wins") {
     import spark.implicits._
-    val in = Files.createTempDirectory("graft_ups_in_")
-    val table = Files.createTempDirectory("graft_ups_tab_").resolve("t").toString
-    val ckpt = Files.createTempDirectory("graft_ups_ckpt_").toString
+    val in = TestSpark.tmpDir("graft_ups_in_")
+    val table = TestSpark.tmpDir("graft_ups_tab_").resolve("t").toString
+    val ckpt = TestSpark.tmpDir("graft_ups_ckpt_").toString
 
     val base = (1L to 50L).map(i => (i, 0L, s"v$i")).toDF("id", "version", "payload")
     Upsert.writeBucketed(base, table, "id", nBuckets = 4)
 
     def writeFile(name: String, rows: Seq[(Long, Long, String)]): Unit = {
-      val tmp = Files.createTempDirectory("graft_ups_stage_")
+      val tmp = TestSpark.tmpDir("graft_ups_stage_")
       rows.toDF("id", "version", "payload")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
