@@ -45,11 +45,13 @@ object Bench {
     }
     // Per query: ONE warm-up execution (excluded from timing — it
     // absorbs that query's codegen/JIT compilation, parquet-footer
-    // caching, and any per-SF cached fixture construction: base
-    // indexes and streaming landing dirs build inside computeIfAbsent
-    // caches, so timed runs measure the engine, not the test rig)
-    // then THREE timed runs, keep the min ("agg" declares this in the
-    // output). The r4 bench proved min-of-2 with no per-query warm-up
+    // caching, and any per-SF fixture construction: base indexes and
+    // streaming landing dirs are built once per JVM by Scratch.fixture,
+    // so timed runs measure the engine, not the test rig) then THREE
+    // timed runs, keep the min ("agg" declares this in the output).
+    // Each run is its own query scope: the pins and checkpoints the
+    // warm-up made are released when it ends, so a timed run computes
+    // its own intermediates instead of reading the warm-up's cache. The r4 bench proved min-of-2 with no per-query warm-up
     // can't separate structural cost from JIT noise: run "a" was
     // routinely 2-5x run "b" on unchanged code (e.g. vs11 a=1.80
     // b=0.34), and queries early in the fixed order paid the

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.Session
+import graft.core.{QueryScope, Session}
 
 /** The registry loop of every main: which queries a run takes, and how
   * one is built, consumed and reported when it fails. */
@@ -20,13 +20,15 @@ object Runner {
     selected
   }
 
-  /** Checks the session contract, builds `q` and consumes its frame. A
-    * failure prints `[tag] name failed: message` and is returned on the
-    * left. `q.fn` may be eager (see [[QueryDef]]): time this whole call. */
+  /** Checks the session contract, builds `q` and consumes its frame in
+    * one [[QueryScope]]: what the query pins, checkpoints or stages is
+    * released before this returns, also when it fails. A failure prints
+    * `[tag] name failed: message` and is returned on the left. `q.fn`
+    * may be eager (see [[QueryDef]]): time this whole call. */
   def run[A](tag: String, spark: SparkSession, sfDir: String, q: QueryDef)
       (consume: DataFrame => A): Either[Throwable, A] = {
     Session.requireContract(spark)
-    try Right(consume(q.fn(spark, sfDir)))
+    try Right(QueryScope(consume(q.fn(spark, sfDir))))
     catch { case e: Throwable =>
       System.err.println(s"[$tag] ${q.name} failed: ${e.getMessage}")
       Left(e)

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.Session
+import graft.core.{QueryScope, Session}
 import graft.ops.{DedupOps, TextIndex, VectorOps}
 
 /** Measured scaling EXPONENTS for the headline sub-quadratic claims
@@ -215,7 +215,9 @@ object Scaling {
 
     kernels.map { case (name, sizes, prep) =>
       val points = sizes.map { n =>
-        def once(): Double = {
+        // one scope per invocation: its pins and scratch dirs are
+        // released after the clock stops
+        def once(): Double = QueryScope {
           val thunk = prep(n) // untimed setup (fresh copy for mutators)
           val t0 = System.nanoTime()
           thunk()

@@ -18,7 +18,7 @@ object Smoke {
     val spark = Session.local(Session.cpus)
     import spark.implicits._
 
-    val root = Scratch.dir("graft_smoke_")
+    val root = Scratch.fixture("smoke_root")(identity)
     println(s"[smoke] fixtures under $root")
     val events = Paths.get("/root/testdata/sf0.001/events.parquet")
 

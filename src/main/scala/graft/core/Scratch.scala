@@ -3,61 +3,62 @@ package graft.core
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
-/** Per-tag scratch directories with bounded lifetime.
+/** Scratch directories and per-JVM fixtures.
   *
   * Several queries materialize a throwaway on-disk artifact per
   * execution (a re-versioned index, a format-roundtrip file, a
-  * streaming landing dir). `Files.createTempDirectory` alone leaks
-  * one directory per execution — under the warmed min-of-3 bench
-  * that's 4 copies per query per run, unbounded across rounds
-  * (ADVICE r7). This keeps the last TWO directories per tag:
-  * requesting generation k+2 of a tag deletes its generation k, and a
-  * JVM shutdown hook removes the survivors.
+  * streaming checkpoint). [[dir]] and [[dirAt]] make one and hand its
+  * deletion to the [[QueryScope]] open at the time, so it is removed
+  * once the query that reads it has been consumed; with no scope open
+  * it lives until JVM exit.
   *
-  * Why two (ADVICE r8): queries return lazy plans over scratch paths
-  * that are normally collected before the same query re-executes, but
-  * nothing enforces that sequencing — a harness that builds several
-  * runs' plans before collecting any would read a deleted path if the
-  * previous generation were deleted at once. By the time generation k
-  * goes, the tag's OWN next plan has been built over k+1.
-  *
-  * Thread-safety: the eviction runs inside the map's per-key compute,
-  * so concurrent requests for the same tag cannot double-delete.
+  * A fixture is input state that a query reads but does not measure —
+  * a base index or a landing dir built once from an sf dir's tables.
+  * [[fixture]] builds each key once per JVM, into a directory under one
+  * root that lives until JVM exit, whatever scope is open when it is
+  * first asked for.
   */
 object Scratch {
-  private val live = new ConcurrentHashMap[String, List[Path]]()
 
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    live.values.forEach(ps => ps.foreach(deleteRecursively))
-    live.clear()
-  }))
-
-  private def retag(tag: String, fresh: Path): String = {
-    var evicted: List[Path] = Nil
-    live.compute(tag, (_, prev) => {
-      val old = if (prev == null) Nil else prev
-      evicted = old.drop(1)
-      fresh :: old.take(1)
-    })
-    evicted.foreach(deleteRecursively)
-    fresh.toString
-  }
-
-  /** A fresh empty scratch directory for `tag`, retiring the tag's
-    * grandparent generation (last-2 retention — see the class note).
-    * Returns its absolute path as a string. */
-  def dir(tag: String): String =
-    retag(tag, Files.createTempDirectory(tag))
+  /** A fresh empty directory in java.io.tmpdir, owned by the open
+    * scope. Returns its absolute path. */
+  def dir(tag: String): String = owned(Files.createTempDirectory(tag))
 
   /** Like [[dir]] but rooted at `base` when writable (e.g. /dev/shm
     * for streaming checkpoints), falling back to java.io.tmpdir. */
   def dirAt(base: String, tag: String): String = {
     val root = Paths.get(base)
-    val fresh =
+    owned(
       if (Files.isWritable(root)) Files.createTempDirectory(root, tag)
-      else Files.createTempDirectory(tag)
-    retag(tag, fresh)
+      else Files.createTempDirectory(tag))
   }
+
+  private def owned(p: Path): String = {
+    QueryScope.onClose(deleteRecursively(p))
+    p.toString
+  }
+
+  private lazy val fixtureRoot: Path = {
+    val root = Files.createTempDirectory("graft_fixtures_")
+    QueryScope.atExit(deleteRecursively(root))
+    root
+  }
+
+  /** One fixture's value, built on first use. A build that throws leaves
+    * the cell empty, so the next caller builds again. */
+  private final class Cell(build: () => Any) { lazy val value: Any = build() }
+  private val fixtures = new ConcurrentHashMap[String, Cell]()
+
+  /** The fixture `key`, built by `build` on the first call in this JVM
+    * and shared by every later one; concurrent first callers wait for
+    * one build. `build` gets a fresh directory under the fixture root to
+    * write into and runs in its own scope, so what it pins or makes with
+    * [[dir]] is released when it returns: the fixture's value must be
+    * self-contained (paths under its directory, table names, schemas). */
+  def fixture[A](key: String)(build: String => A): A =
+    fixtures.computeIfAbsent(key, _ => new Cell(() => QueryScope {
+      build(Files.createTempDirectory(fixtureRoot, "f").toString)
+    })).value.asInstanceOf[A]
 
   private def deleteRecursively(p: Path): Unit = {
     import scala.util.Try

@@ -3,8 +3,10 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** Scoped session settings: the one place library code changes the
-  * session's SQL conf. Settings are session-wide, so a change made here
-  * is seen by every query the session runs until the scope ends. */
+  * session's SQL conf. Settings are session-wide and are NOT isolated
+  * between concurrent query scopes: a change made here is seen by every
+  * query the session runs until the scope ends, including queries
+  * running on other threads at the same time. */
 object SessionConf {
 
   /** Run `body` with each `key -> value` set on `spark`'s conf. On every

@@ -108,7 +108,7 @@ object Bpe {
         step += 1
       }
     }
-    (dict, merges.result())
+    (Pin.scoped(dict), merges.result())
   }
 
   /** The learned merge table as a DataFrame (step, pair, merged, cnt).

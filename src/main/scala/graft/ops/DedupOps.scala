@@ -1322,15 +1322,14 @@ object DedupOps {
         // re-running the expiry against it is an idempotent no-op
         // (RetentionSpec pins that), so every execution measures the
         // verb: O(1) dir drops + the sharded probe
-        val store = shardStoreCache.computeIfAbsent(d, _ => {
-          val st = graft.core.Scratch.dir(
-            s"graft_lsh_ret_${d.hashCode & 0x7fffffff}_") + "/shards"
+        val store = graft.core.Scratch.fixture(s"dd22_shard_store:$d") { root =>
+          val st = s"$root/shards"
           (0 until 3).foreach { day =>
             lshBandIndex(all.filter(pmod(col("doc_id"), lit(3)) === day))
               .write.parquet(s"$st/day=$day")
           }
           st
-        })
+        }
         expireLshShards(s, store, cutoffDay = 1)
         val surviving = all.filter(pmod(col("doc_id"), lit(3)) =!= 0)
         val batch = docs(s, d).filter(col("doc_id") % 10 === 0)
@@ -1624,7 +1623,7 @@ object DedupOps {
       labels = next
     }
     Pin.releaseCheckpoint(sym)
-    labels
+    Pin.scoped(labels)
   }
 
   /** Per-doc LSH band keys over the PORTABLE KM double-hashing
@@ -1714,7 +1713,7 @@ object DedupOps {
     // band keys), so excluding them from the verify side too is
     // value-identical to the old unfiltered verify input.
     // Pin.checkpointed (not a bare localCheckpoint): the stored blocks
-    // are reaped a bounded number of checkpoints later, so back-to-back
+    // are released when the query's scope closes, so back-to-back
     // invocations (min-of-3 bench, pipeline compositions) can't pile
     // dead block copies into the storage pool and evict live frames.
     val base = Pin.checkpointed(spread.select(col("doc_id"),
@@ -1774,24 +1773,14 @@ object DedupOps {
     * re-staging its input four times (the same input-fixture rationale
     * as [[graft.streaming.StreamQueries]]' landing cache). Answers are
     * identical either way: the index is a pure function of the lake.
-    * Bounded: one entry per sf dir per JVM. */
-  private val baseIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  /** dd22's day-sharded posting store per sf dir — same input-fixture
-    * rationale as [[baseLshIndex]]. Bounded: one entry per sf dir. */
-  private val shardStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
+    * One per sf dir per JVM; dd22's day-sharded store is another. */
   private[ops] def baseLshIndex(s: SparkSession, d: String): String =
-    baseIndexCache.computeIfAbsent(d, _ => {
+    graft.core.Scratch.fixture(s"dd_base_lsh_index:$d") { tmp =>
       val table = s"lsh_base_${d.hashCode & 0x7fffffff}"
-      val tmp = graft.core.Scratch.dir(
-        s"graft_lsh_idx_${d.hashCode & 0x7fffffff}_")
       writePortableLshIndex(docs(s, d).select("doc_id", "text"),
         table, s"$tmp/index")
       table
-    })
+    }
 
   /** Persist index rows already in [[lshBandIndex]] layout with the
     * bucketed-on-band-key physical layout the zero-Exchange probe plan

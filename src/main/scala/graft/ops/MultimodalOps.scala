@@ -1099,10 +1099,10 @@ object MultimodalOps {
     // per payload byte (8-byte hashes of half-overlapping windows);
     // a deployment needing executor-loss fault tolerance swaps the
     // localCheckpoint for a reliable checkpoint dir, same shape.
-    // Pin.checkpointed bounds the stored blocks' lifetime (the bare
-    // localCheckpoint this had until r11 leaked one full windowed-lake
-    // copy per invocation — 4 per benched query — until a JVM GC let
-    // the ContextCleaner find them).
+    // Pin.checkpointed ties the stored blocks to the query's scope (the
+    // bare localCheckpoint this had until r11 leaked one full
+    // windowed-lake copy per invocation — 4 per benched query — until a
+    // JVM GC let the ContextCleaner find them).
     val base = Pin.checkpointed(payloadWindowSets(assets)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.md5_minhash_sig(col("shs"), 64).as("mh"),
@@ -1148,18 +1148,14 @@ object MultimodalOps {
   /** The lake's base payload index, built at most once per sf dir —
     * the same input-fixture rationale as [[DedupOps.baseLshIndex]]:
     * a production probe runs against an index that already exists.
-    * Bounded: one entry per sf dir per JVM. */
-  private val payloadIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
+    * One per sf dir per JVM. */
   private def basePayloadIndex(s: SparkSession, d: String): String =
-    payloadIndexCache.computeIfAbsent(d, _ => {
+    graft.core.Scratch.fixture(s"mm_payload_index:$d") { tmp =>
       val table = s"mm17_payload_idx_${d.hashCode & 0x7fffffff}"
-      val tmp = graft.core.Scratch.dir(
-        s"graft_payload_idx_${d.hashCode & 0x7fffffff}_")
       DedupOps.writeLshIndexRows(
         payloadLshIndex(media(s, d).toDF().select("doc_id", "payload")),
         table, s"$tmp/index")
       table
-    })
+    }
 }
 

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.QueryScope
+
 /** Shared row-pinning for multi-pass operators (PrefixSum phases,
   * dd06's three shingle uses, tx09's tf reuse, ev30/ev31's selector
   * passes): the input must show the SAME rows to every pass without
@@ -15,95 +17,26 @@ import org.apache.spark.storage.StorageLevel
   * an eager `localCheckpoint` job, because its recompute could change
   * rows between passes.
   *
-  * Release policy: engine queries consume each result before the next
-  * is built (Verify and Bench are sequential), so caches from EARLIER
-  * queries are dead weight — left alone they accumulate across a
-  * 228-query pass and later queries pay the GC bill (the r4→r5 st03
-  * slowdown, and dd06's 2× first-run outlier). Each pin therefore
-  * releases all but the most recent `Keep` pinned frames. The actual
-  * pinning callers are PrefixSum.materialize (one pin per
-  * byHexKey/byLongKey call), dd06's shingle reuse
-  * (`DedupOps.scala`), tx09's tf reuse and tx14's token-set reuse
-  * (`TextOps.scala`), and ev30/ev31's selector passes
-  * (`EventOps.scala`) — at most 3 pins live within any single query,
-  * so `Keep` = 6 means a pin can never unpersist a sibling that the
-  * SAME query still needs (PinBudgetSpec pins this bound). Even that
-  * worst case would only recompute, not corrupt, for integer/string
-  * plans; NOTE the recompute-safety argument is weaker for
-  * shuffle-order-dependent float aggregates (e.g. round(sum(double)))
-  * which Spark flags `deterministic` yet may differ in ulps on an
-  * eviction-forced recompute — acceptable only because the per-query
-  * pin count stays under `Keep`, which is exactly what PinBudgetSpec
-  * enforces.
-  *
-  * Bench runs each query 1+3 times on an identical plan: Spark's
-  * CacheManager dedups the cache entry across reruns, so a naive
-  * deque would hold several entries aliasing ONE cache entry and
-  * evicting the oldest alias would unpersist data the newest pin
-  * still references (silently measuring recompute, not cache). A
-  * re-pin of an already-cached plan therefore REFRESHES the existing
-  * deque entry's position instead of inserting a duplicate.
+  * Lifetime: every pin and checkpoint belongs to the [[QueryScope]]
+  * open when it is made and is released when that scope closes — after
+  * the query that made it has been consumed, never while it still
+  * reads it. Spark's CacheManager keys cache entries by plan, so a
+  * re-pin of an identical plan inside the same scope shares the first
+  * pin's entry and stays cached until the scope closes. Bench's timed
+  * runs each open their own scope, so none of them reads an
+  * intermediate that the warm-up run cached.
   */
 object Pin {
-
-  private val Keep = 6
-  private val cached = new java.util.ArrayDeque[DataFrame]
-
-  /** DEQUE pins observed since the last [[resetBudget]] — test-only
-    * observability for PinBudgetSpec's "no query exceeds Keep" pin
-    * (atomic: queries are built single-threaded, but a counter that is
-    * only MOSTLY correct is worse than none). Counts only the
-    * persist/deque branch: a nondeterministic-plan `localCheckpoint`
-    * does not count against THIS budget — it enters the separate
-    * `ckpts` deque below, whose own (stricter) budget is tracked by
-    * [[maxCkLiveSinceReset]] and enforced by CkBudgetSpec: eviction
-    * there destroys non-recomputable blocks, so its safety bound is
-    * "live checkpoints per query ≪ KeepCk", not "pins ≤ Keep" (r6 +
-    * r11 ADVICE). */
-  private val pinCount = new java.util.concurrent.atomic.AtomicInteger(0)
-  private[graft] def pinsSinceReset: Int = pinCount.get()
-  private[graft] def resetBudget(): Unit = {
-    pinCount.set(0)
-    ckLive.synchronized { ckLive.clear(); maxCkLive = 0 }
-  }
-
-  /** Live-checkpoint budget observability (r11 VERDICT item 3): every
-    * frame [[checkpointed]] creates is tracked by its block-holding
-    * RDD id until [[releaseCheckpoint]] (direct or deque-reap) frees
-    * it. An evicted localCheckpoint cannot recompute — the KeepCk
-    * deque is only safe while no query keeps more than a small number
-    * of checkpoints live at once, which CkBudgetSpec enforces for
-    * every registered query via this high-water mark. */
-  private val ckLive = new java.util.HashSet[Int]
-  private var maxCkLive = 0
-  private[graft] def maxCkLiveSinceReset: Int =
-    ckLive.synchronized(maxCkLive)
 
   /** Pin `df`'s rows across multiple consuming passes. */
   def once(df: DataFrame): DataFrame = {
     val nondet = df.queryExecution.analyzed.exists(
       _.expressions.exists(_.exists(!_.deterministic)))
     if (nondet) checkpointed(df)
-    else cached.synchronized {
-      pinCount.incrementAndGet()
-      // Dataset.storageLevel consults the CacheManager by plan
-      // equivalence over the NORMALIZED plan, so it detects a cache
-      // entry created via a DIFFERENT Dataset instance with the same
-      // plan. The deque dedup below must match with the SAME plan form
-      // the CacheManager keys on (queryExecution.normalized) — with
-      // `analyzed`, two plans the CacheManager dedups could fail the
-      // deque match, leaving a stale alias whose eviction unpersists
-      // an entry a newer pin still references (r6 ADVICE).
-      val wasCached = df.storageLevel != StorageLevel.NONE
+    else {
       val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      if (wasCached) {
-        val it = cached.iterator()
-        while (it.hasNext)
-          if (it.next().queryExecution.normalized
-                .sameResult(p.queryExecution.normalized)) it.remove()
-      }
-      cached.addLast(p)
-      while (cached.size > Keep) cached.removeFirst().unpersist(false)
+      val sc = df.sparkSession.sparkContext
+      QueryScope.onClose(if (!sc.isStopped) p.unpersist(false))
       p
     }
   }
@@ -121,41 +54,30 @@ object Pin {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
 
-  /** Release a frame produced by [[checkpointed]] (or any
-    * `localCheckpoint`) whose consumers are all done — loop-style
-    * callers (connectedComponents, Bpe.train) release each superseded
-    * round themselves, which is why this is public to the package. */
+  /** Free the blocks of a frame produced by [[checkpointed]] (or any
+    * `localCheckpoint`) now. Loop kernels (connectedComponents,
+    * Bpe.train) free each superseded round this way instead of holding
+    * every round until their scope closes. */
   private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    checkpointRdd(df).foreach { r =>
-      ckLive.synchronized(ckLive.remove(r.id))
-      r.unpersist(false)
-    }
+    checkpointRdd(df).foreach(_.unpersist(false))
 
-  /** Eagerly `localCheckpoint` a deterministic-or-not plan and bound
-    * the STORED BLOCKS' lifetime the way [[once]] bounds persist
-    * entries. Unlike a persist, an evicted checkpoint cannot recompute
-    * (the lineage is truncated), so entries are only reaped `KeepCk`
-    * checkpoints later — by which time the bench/Verify's sequential
-    * consume-then-build discipline guarantees the frame is dead (at
-    * most ~2 checkpoints are live inside any single query; see the
-    * Pin release-policy note above). Without this, every kernel
-    * invocation leaks its blocks until a JVM GC lets the
-    * ContextCleaner find them — across a 298-query bench pass the
-    * leaked blocks fill the storage pool and evict the LIVE frames,
-    * which then re-read from disk or recompute mid-measurement (the
-    * r11-baseline dd19/dd20 4-6x full-run-only spikes). */
-  private val KeepCk = 6
-  private val ckpts = new java.util.ArrayDeque[DataFrame]
-  def checkpointed(df: DataFrame): DataFrame = ckpts.synchronized {
-    val c = df.localCheckpoint(true)
+  /** Hand the release of `c`, a `localCheckpoint` its caller made, to
+    * the open scope. Returns `c`. */
+  private[graft] def scoped(c: DataFrame): DataFrame = {
     checkpointRdd(c).foreach { r =>
-      ckLive.synchronized {
-        ckLive.add(r.id)
-        if (ckLive.size > maxCkLive) maxCkLive = ckLive.size
-      }
+      QueryScope.onClose(if (!r.sparkContext.isStopped) r.unpersist(false))
     }
-    ckpts.addLast(c)
-    while (ckpts.size > KeepCk) releaseCheckpoint(ckpts.removeFirst())
     c
   }
+
+  /** Eagerly `localCheckpoint` a deterministic-or-not plan, owned by the
+    * open scope. Unlike a persist, a lost checkpoint block cannot be
+    * recomputed (the lineage is truncated), which is why its release
+    * waits for the scope: the query that reads it has been consumed by
+    * then. Without a release, every kernel invocation would leak its
+    * blocks until a JVM GC lets the ContextCleaner find them — across a
+    * 298-query bench pass the leaked blocks fill the storage pool and
+    * evict the LIVE frames (the r11-baseline dd19/dd20 4-6x
+    * full-run-only spikes). */
+  def checkpointed(df: DataFrame): DataFrame = scoped(df.localCheckpoint(true))
 }

@@ -560,8 +560,7 @@ object Pipeline {
         val cc = DedupOps.connectedComponents(
           corpus.select(col("doc_id").as("id")), edges)
         // pinned: both packs filter it, and CC's label frame upstream
-        // is itself multi-round — total pins here stay within the
-        // PinBudgetSpec Keep bound
+        // is itself multi-round
         val withSplit = Pin.once(corpus.join(
           cc.select(col("id").as("doc_id"),
             when(pmod(DedupOps.portableHash60(col("label").cast("string")),
@@ -1238,12 +1237,9 @@ object Pipeline {
     * against state that already exists): (digest table, payload index
     * table), both over the lake's exact survivors and both bucketed so
     * a day-2 probe joins them without exchanging the store side. */
-  private val day1StateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]
   private[ops] def day1MediaState(s: SparkSession, d: String): (String, String) =
-    day1StateCache.computeIfAbsent(d, _ => {
+    graft.core.Scratch.fixture(s"pp12_day1_state:$d") { tmp =>
       val tag = d.hashCode & 0x7fffffff
-      val tmp = graft.core.Scratch.dir(s"graft_pp12_state_${tag}_")
       val sv = lakeExactSurvivors(s, d)
       val digestTable = s"pp12_digests_$tag"
       sv.select(md5(col("payload")).as("fp"), col("doc_id").as("keeper_id"))
@@ -1255,5 +1251,5 @@ object Pipeline {
         MultimodalOps.payloadLshIndex(sv.select("doc_id", "payload")),
         idxTable, s"$tmp/index")
       (digestTable, idxTable)
-    })
+    }
 }

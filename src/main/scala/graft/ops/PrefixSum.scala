@@ -33,8 +33,8 @@ import org.apache.spark.sql.functions._
 object PrefixSum {
 
   /** Pin `df`'s rows across the multi-pass phases — shared policy in
-    * [[Pin]] (lazy persist for deterministic plans, bounded release of
-    * prior queries' caches). */
+    * [[Pin]] (lazy persist for deterministic plans, released with the
+    * query's scope). */
   private def materialize(df: DataFrame): DataFrame = Pin.once(df)
 
   /** Constant-0 but NON-FOLDABLE partition key for windows whose input

@@ -1178,7 +1178,7 @@ object Relational {
         val orphans = liDf.join(ord(s, d),
             col("l_orderkey") === col("o_orderkey"), "left_anti")
           .agg(count(lit(1)).cast("long").as("orphans"))
-        val b = base.cache()
+        val b = Pin.once(base)
         b.select(lit("not_null(l_orderkey)").as("constraint_name"),
             col("null_key").as("violations"), col("n_rows"))
           .unionByName(b.select(lit("range(l_quantity > 0)").as("constraint_name"),

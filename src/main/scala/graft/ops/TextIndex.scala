@@ -168,10 +168,11 @@ object TextIndex {
     * is O(index) because a doc's terms hash across every tp partition
     * (see [[vacuumTextIndex]]); a production store amortizes it by
     * batching edits between compactions — the verb's CONTRACT
-    * (≡ full rebuild over the edited lake) is what this exposes. */
+    * (≡ full rebuild over the edited lake) is what this exposes. The
+    * tombstones are deleted before it returns. */
   def reVersionTextIndex(spark: SparkSession, oldDocs: DataFrame,
       newDocs: DataFrame, dir: String, outDir: String,
-      newBatch: Long = 1L): Unit = {
+      newBatch: Long = 1L): Unit = graft.core.QueryScope {
     val tombs = graft.core.Scratch.dir("graft_txt_rev_tomb_") + "/t"
     deleteFromTextIndex(oldDocs, tombs)
     vacuumTextIndex(spark, dir, tombs, outDir)

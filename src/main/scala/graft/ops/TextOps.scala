@@ -1786,45 +1786,34 @@ object TextOps {
 
   /** Per-sf cached base text index (input-fixture rationale, like
     * dd17's baseLshIndex: a production probe runs against an index
-    * that already exists). Scratch-tagged per sf dir, swept at exit. */
-  private val textIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
+    * that already exists), built once per sf dir. */
   private[graft] def baseTextIndex(s: SparkSession, d: String): String =
-    textIndexCache.computeIfAbsent(d, _ => {
-      val dir = graft.core.Scratch.dir(
-        s"graft_txt_idx_${d.hashCode & 0x7fffffff}_")
+    graft.core.Scratch.fixture(s"tx_base_index:$d") { dir =>
       TextIndex.buildTextIndex(docs(s, d).select("doc_id", "text"),
         s"$dir/index")
       s"$dir/index"
-    })
+    }
 
   /** tx41's 3-batch store (batch b = the doc_id % 3 = b class) — the
     * health audit's READ-ONLY input fixture, cached per sf dir. tx40
     * expires (mutates) the same layout, so it builds its own. */
-  private val text3IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
   private def threeBatchTextIndex(s: SparkSession, d: String): String =
-    text3IndexCache.computeIfAbsent(d, _ => {
-      val dir = graft.core.Scratch.dir(
-        s"graft_txt_idx3_${d.hashCode & 0x7fffffff}_") + "/index"
+    graft.core.Scratch.fixture(s"tx_three_batch_index:$d") { root =>
+      val dir = s"$root/index"
       val base = docs(s, d).select("doc_id", "text")
       (0L to 2L).foreach(b => TextIndex.appendTextIndex(
         base.filter(pmod(col("doc_id"), lit(3)) === b), dir, b))
       dir
-    })
+    }
 
   /** tx34's 90%-corpus base index (the append verb's input fixture). */
-  private val text90IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
   private def base90TextIndex(s: SparkSession, d: String): String =
-    text90IndexCache.computeIfAbsent(d, _ => {
-      val dir = graft.core.Scratch.dir(
-        s"graft_txt_idx90_${d.hashCode & 0x7fffffff}_")
+    graft.core.Scratch.fixture(s"tx_base90_index:$d") { dir =>
       TextIndex.buildTextIndex(docs(s, d)
         .filter(col("doc_id") % 10 =!= 9).select("doc_id", "text"),
         s"$dir/index")
       s"$dir/index"
-    })
+    }
 
   /** Oracle for the [[TextIndex]] probes: tx30's BM25 replay, keyed on
     * the portable md5-low60 TERM HASH exactly as the index is (so even

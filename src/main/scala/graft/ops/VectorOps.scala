@@ -214,11 +214,11 @@ object VectorOps {
     * and after — vacuum is pure layout economics: it restores
     * anti-join-free probes and re-bounds the sidecar so
     * [[minusTombstones]]' broadcast stays batch-sized. No-op when no
-    * tombstones exist. */
+    * tombstones exist. The staging dir is deleted before it returns. */
   def vacuumIvfIndex(spark: SparkSession, path: String): Unit =
       graft.core.PhaseTimer.phase("vacuum") {
     val (td, fs) = hadoopPath(spark, tombstoneDir(path))
-    if (fs.exists(td)) { // no-op when no tombstones exist
+    if (fs.exists(td)) graft.core.QueryScope { // no-op when no tombstones exist
       val index = spark.read.parquet(path)
       // bounded: at most one row per index cell
       val touched = spark.read.parquet(td.toString)
@@ -415,24 +415,6 @@ object VectorOps {
       .select(col("a"), col("b"), cosine(col("va"), col("vb")).as("c"))
       .filter(col("c") > threshold)
       .select(col("a"), col("b"), round(col("c"), 4).as("cos"))
-  }
-
-  /** Join-based IVF probe: no driver collect — Spark's dynamic
-    * partition pruning restricts the index scan to the probed cells at
-    * runtime (verified: `dynamicpruningexpression` lands in the scan's
-    * PartitionFilters). Use this when the probe set is itself a large
-    * distributed relation; [[probeIvfIndex]] (collect + static isin)
-    * fits small interactive probe sets. */
-  def probeIvfIndexDpp(spark: SparkSession, path: String, probes: DataFrame, k: Int): DataFrame = {
-    val cells = minusTombstones(spark, path, spark.read.parquet(path))
-    val w = Window.partitionBy("probe_id").orderBy(col("c").desc, col("neighbor_id"))
-    cells.join(probes.hint("broadcast"),
-        col("cid") === col("pcid") && col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        cosine(col("pv"), col("v")).as("c"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("probe_id"), col("neighbor_id"), col("rnk"), round(col("c"), 4).as("cos"))
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -2639,18 +2621,15 @@ object VectorOps {
   /** Per-sf cached base IVF index (input-fixture rationale, like
     * dd17's baseLshIndex / tx33's baseTextIndex: a serving probe runs
     * against a store that already exists). */
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
   private[ops] def baseIvfIndexDir(s: SparkSession, d: String): String =
-    ivfIndexCache.computeIfAbsent(d, _ => {
-      val dir = graft.core.Scratch.dir(
-        s"graft_ivf_base_${d.hashCode & 0x7fffffff}_") + "/index"
+    graft.core.Scratch.fixture(s"vs_base_ivf_index:$d") { root =>
+      val dir = s"$root/index"
       val e = emb(s, d)
       val centroids = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("v").as("cv"))
       writeIvfIndex(e, centroids, dir)
       dir
-    })
+    }
 
   /** Per-sf cached ATTRIBUTE-carrying IVF index (vs33's fixture): the
     * same cells as [[baseIvfIndexDir]], but every stored row also
@@ -2662,12 +2641,9 @@ object VectorOps {
     * join folded into the index write; the attribute is immutable
     * with the vector (a metadata change is a re-version, vs26's
     * verb). */
-  private val attrIvfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
   private[ops] def attrIvfIndexDir(s: SparkSession, d: String): String =
-    attrIvfIndexCache.computeIfAbsent(d, _ => {
-      val dir = graft.core.Scratch.dir(
-        s"graft_ivf_attr_${d.hashCode & 0x7fffffff}_") + "/index"
+    graft.core.Scratch.fixture(s"vs_attr_ivf_index:$d") { root =>
+      val dir = s"$root/index"
       val e = emb(s, d)
       val centroids = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("v").as("cv"))
@@ -2678,5 +2654,5 @@ object VectorOps {
           .write.partitionBy("cid").mode("overwrite").parquet(dir)
       }
       dir
-    })
+    }
 }

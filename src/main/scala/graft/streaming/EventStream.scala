@@ -71,17 +71,6 @@ object EventStream {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value"))
 
-  /** Sliding-window rates: overlapping 1-hour windows advancing every
-    * `slideMinutes` — the smoothed-rate view a monitoring pipeline
-    * reads. Each event lands in 60/slideMinutes windows; state stays
-    * watermark-bounded exactly like the tumbling case. */
-  def slidingCounts(events: DataFrame, slideMinutes: Int): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour", s"$slideMinutes minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n"))
-
   /** Streaming exact dedup: drop repeats of `keyCols` arriving within
     * the watermark horizon — the streaming face of the batch dedup
     * family (dd01). State is bounded: key fingerprints older than the
@@ -92,60 +81,6 @@ object EventStream {
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
   }
-
-  /** Streaming NEAR-duplicate suppression: drop records whose content
-    * *fingerprint* (normalized-text MinHash signature, computed by the
-    * native `minhash_sig` expression map-side) was already seen within
-    * the watermark horizon. Exact duplicates and whitespace/case
-    * variants collapse to the same signature, so this is the streaming
-    * face of the dd02 batch near-dup path; state holds one fingerprint
-    * per distinct signature and is watermark-evicted, so it survives
-    * unbounded input. Null texts fingerprint to null and blank texts to
-    * the empty-set signature — each group keeps ONE survivor per
-    * watermark horizon, consistent with "identical content dedupes". */
-  def nearDupStream(records: DataFrame, textCol: String, numHashes: Int = 16): DataFrame = {
-    val norm = regexp_replace(lower(trim(col(textCol))), "\\s+", " ")
-    records
-      .withColumn("fp",
-        graft.functions.GraftFunctions.minhash_sig(
-          graft.functions.GraftFunctions.word_shingles(norm, 3), numHashes)
-          .cast("string"))
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("fp")
-      .drop("fp")
-  }
-
-  /** Session windows via the built-in `session_window` generator — the
-    * declarative alternative to [[sessionize]]'s explicit state machine
-    * (Spark merges overlapping per-event gap windows internally; state
-    * is watermark-bounded). Works identically over batch and stream;
-    * EventStreamSpec cross-checks its per-user session counts against
-    * the flatMapGroupsWithState implementation. */
-  def sessionWindowStats(events: DataFrame, gapMinutes: Int): DataFrame =
-    events
-      .withWatermark("ts", s"$gapMinutes minutes")
-      .groupBy(session_window(col("ts"), s"$gapMinutes minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        unix_micros(col("session_window.start")).as("start_us"),
-        unix_micros(col("session_window.end")).as("end_us"),
-        col("n_events"))
-
-  /** Stream-static enrichment: join the stream against a static
-    * dimension (user → segment, product → category …) and aggregate per
-    * enriched key. The static side re-resolves per micro-batch (Spark
-    * re-plans the batch side each trigger) and broadcasts when small —
-    * the standard dimension-enrichment shape; no streaming state beyond
-    * the windowed aggregation, which stays watermark-bounded. */
-  def enrichedCounts(events: DataFrame, dim: DataFrame, dimKey: String,
-      dimValue: String): DataFrame =
-    events
-      .join(broadcast(dim), col("user_id") === col(dimKey))
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col(dimValue))
-      .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      .select(col("window.start").as("window_start"), col(dimValue),
-        col("n"), col("sum_value"))
 
   /** Stream-stream interval join: each purchase joined to the same
     * user's clicks in the preceding `windowMinutes` (attribution-style).

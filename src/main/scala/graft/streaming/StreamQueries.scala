@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.{QueryDef, Tables}
-import graft.core.{PhaseTimer, Scratch}
+import graft.core.{PhaseTimer, QueryScope, Scratch}
 import graft.core.SessionConf.withConf
 
 /** Structured Streaming operators registered in the CORRECTNESS gate.
@@ -41,43 +41,36 @@ object StreamQueries {
     * watermarks/window() require the LTZ type. */
   private def tsCol(df: DataFrame): DataFrame = graft.Tables.normalizeTs(df)
 
-  /** Schema probe cache: the stream source needs an explicit schema,
-    * and a parquet footer read costs ~80 ms — per QUERY RUN, since
-    * every run re-stages the source. The testdata tables are
-    * immutable, so probe once per path (a real deployment passes its
-    * schema explicitly — this cache only de-duplicates the harness's
-    * probe, it is not a correctness surface). */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]
-
-  /** Staged landing directories and the schema their files carry, per
-    * fixture key. The arriving files are an immutable input fixture
-    * (what a real deployment's producers write), not part of the
-    * ingest being measured: each is staged once per key and reused
-    * across runs, so a min-of-3 bench measures the ingest rather than
-    * re-staging its input (same rationale as [[schemaCache]]). */
-  private val landingCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]
+  /** The schema of the parquet file at `path`, probed once per path.
+    * The stream source needs an explicit schema, and a footer read
+    * costs ~80 ms per query run; the testdata tables are immutable (a
+    * real deployment passes its schema explicitly — this only
+    * de-duplicates the harness's probe, it is not a correctness
+    * surface). */
+  private def schemaOf(s: SparkSession, path: String): StructType =
+    Scratch.fixture(s"stream_schema:$path")(_ => s.read.parquet(path).schema)
 
   /** Stage a landing fixture once per `key` with `write`, which fills the
     * directory it is given; returns the dir and its files' schema. The
-    * Scratch tag carries the key's hash so fixtures of different keys
-    * never evict each other while the cache still points at them. */
-  private def staged(s: SparkSession, key: String, tag: String)(
+    * arriving files are an immutable input fixture (what a real
+    * deployment's producers write), not part of the ingest being
+    * measured: each is staged once per key and reused across runs, so a
+    * min-of-3 bench measures the ingest rather than re-staging its
+    * input. */
+  private def staged(s: SparkSession, key: String)(
       write: Path => Unit): (String, StructType) =
-    landingCache.computeIfAbsent(key, _ => {
-      val in = Paths.get(Scratch.dir(s"${tag}_${key.hashCode & 0x7fffffff}_"))
-        .resolve("in")
+    Scratch.fixture(s"stream_landing:$key") { dir =>
+      val in = Paths.get(dir).resolve("in")
       write(in)
       (in.toString, s.read.parquet(in.toString).schema)
-    })
+    }
 
   /** `df` staged as 4 landing files, hash-partitioned on its first
     * column (the id). Ingests read them 2 files per trigger, so their
     * results must accumulate across micro-batch boundaries. */
-  private def landing(s: SparkSession, key: String, tag: String)(
+  private def landing(s: SparkSession, key: String)(
       df: => DataFrame): (String, StructType) =
-    staged(s, key, tag) { in =>
+    staged(s, key) { in =>
       val frame = df
       frame.repartition(4, col(frame.columns.head))
         .write.mode("overwrite").parquet(in.toString)
@@ -86,7 +79,7 @@ object StreamQueries {
   /** The (doc_id, text) documents landing shared by st12, st14, st15,
     * st16 and st20. */
   private def docsLanding(s: SparkSession, d: String): (String, StructType) =
-    landing(s, s"$d/documents.parquet", "graft_lsh_landing")(
+    landing(s, s"$d/documents.parquet")(
       s.read.parquet(s"$d/documents.parquet").select("doc_id", "text"))
 
   /** The documents as media assets (doc_id, payload = UTF-8 text
@@ -101,9 +94,9 @@ object StreamQueries {
     * the file→batch assignment: read one file per trigger, the
     * distinct mtimes make the source ingest the slices oldest-first,
     * so batch i is exactly slice i. */
-  private[streaming] def pinnedLanding(s: SparkSession, key: String, tag: String,
+  private[streaming] def pinnedLanding(s: SparkSession, key: String,
       slices: => Seq[DataFrame]): (String, StructType) =
-    staged(s, key, tag) { in =>
+    staged(s, key) { in =>
       Files.createDirectories(in)
       slices.zipWithIndex.foreach { case (slice, b) =>
         val tmp = in.resolveSibling(s"stage$b")
@@ -132,8 +125,8 @@ object StreamQueries {
     * configuration, not semantics (a real deployment puts it on fast
     * durable storage): it lives on tmpfs when the host has one
     * (marginal but strictly less IO). AvailableNow over a fixed input
-    * never resumes, so Scratch retiring it two runs later loses
-    * nothing. */
+    * never resumes, so the query's scope deleting it once the query
+    * has been consumed loses nothing. */
   private def checkpointDir(tag: String): String =
     Scratch.dirAt("/dev/shm", tag)
 
@@ -158,22 +151,16 @@ object StreamQueries {
       s: SparkSession,
       path: String,
       outputMode: String)(build: DataFrame => DataFrame): DataFrame = {
-    val schema = schemaCache.computeIfAbsent(path, p => s.read.parquet(p).schema)
-    val src = s.readStream.schema(schema)
+    val src = s.readStream.schema(schemaOf(s, path))
       .parquet(symlinkDir(path, "graft_stream_src_"))
     val name = s"graft_stream_sink_${runId.incrementAndGet()}"
-    // Memory sinks live in driver heap until their temp view is
-    // dropped (bounded collect: the catalog's table LIST, not data).
-    // Callers consume each stream's table before starting the
-    // next (Verify writes it out, Bench counts it), so every sink from
-    // an EARLIER run is dead weight by now — without this, a bench
-    // pass over the st family accumulates tens of sf-sized result
-    // tables and later streaming runs pay the GC bill (the r4→r5 st03
-    // slowdown under the 3-run bench).
-    s.catalog.listTables().collect()
-      .map(_.name)
-      .filter(t => t.startsWith("graft_stream_sink_") && t != name)
-      .foreach(s.catalog.dropTempView)
+    // A memory sink lives in driver heap until its temp view is
+    // dropped: the query's scope drops it once the table has been
+    // consumed. Left alone, a bench pass over the st family
+    // accumulates tens of sf-sized result tables and later streaming
+    // runs pay the GC bill (the r4→r5 st03 slowdown under the 3-run
+    // bench).
+    QueryScope.onClose(s.catalog.dropTempView(name))
     // Harness-floor profile (r7, sf0.1, stateless pass-through,
     // steady state ~0.6 s/run): addBatch — the incremental plan's
     // actual execution plus the memory sink's driver-side collection —
@@ -634,8 +621,8 @@ object StreamQueries {
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         val centroids = e.filter(col("vec_id") < 8)
           .select(col("vec_id").as("cid"), col("v").as("cv"))
-        val (inDir, inSchema) = landing(s, s"$d/embeddings.parquet",
-          "graft_ivf_landing")(Tables(s, d, "embeddings").select("vec_id", "embedding"))
+        val (inDir, inSchema) = landing(s, s"$d/embeddings.parquet")(
+          Tables(s, d, "embeddings").select("vec_id", "embedding"))
         val base = Scratch.dir("graft_ivf_ingest_")
         val ck = checkpointDir("graft_ivf_ck_")
         runToEnd(s) {
@@ -823,7 +810,7 @@ object StreamQueries {
         " WHERE doc_id % 4 >= 2", probeId = 43)),
       (s, d) => {
         val docsDf = s.read.parquet(s"$d/documents.parquet")
-        val (inDir, inSchema) = pinnedLanding(s, s"$d/ttl4", "graft_ttl_landing",
+        val (inDir, inSchema) = pinnedLanding(s, s"$d/ttl4",
           (0 to 3).map(b => docsDf.select("doc_id", "text")
             .filter(pmod(col("doc_id"), lit(4)) === b)))
         val base = Scratch.dir("graft_ttl_idx_")
@@ -878,7 +865,7 @@ object StreamQueries {
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         val centroids = e.filter(col("vec_id") < 8)
           .select(col("vec_id").as("cid"), col("v").as("cv"))
-        val (inDir, inSchema) = pinnedLanding(s, s"$d/ttlvec4", "graft_ttlvec_landing", {
+        val (inDir, inSchema) = pinnedLanding(s, s"$d/ttlvec4", {
           val raw = s.read.parquet(s"$d/embeddings.parquet").select("vec_id", "embedding")
           (0 to 3).map(b => raw.filter(pmod(col("vec_id"), lit(4)) === b))
         })
@@ -916,7 +903,7 @@ object StreamQueries {
         "doc_id BETWEEN 50 AND 57", k = 3)),
       (s, d) => {
         val docsDf = s.read.parquet(s"$d/documents.parquet")
-        val (inDir, inSchema) = pinnedLanding(s, s"$d/serve2", "graft_serve_landing",
+        val (inDir, inSchema) = pinnedLanding(s, s"$d/serve2",
           Seq((50L, 53L), (54L, 57L)).map { case (lo, hi) =>
             docsDf.select("doc_id", "text").filter(col("doc_id").between(lo, hi))
           })
@@ -1026,7 +1013,7 @@ object StreamQueries {
              |FROM keys GROUP BY bd""".stripMargin),
       (s, d) => {
         val (inDir, inSchema) =
-          landing(s, s"$d/payload-landing", "graft_payload_landing")(payloads(s, d))
+          landing(s, s"$d/payload-landing")(payloads(s, d))
         val base = Scratch.dir("graft_payload_ingest_")
         val ck = checkpointDir("graft_payload_ck_")
         runToEnd(s) {
@@ -1093,11 +1080,10 @@ object StreamQueries {
              |  CAST(sum(s) AS BIGINT) AS id_sum
              |FROM keys GROUP BY bd""".stripMargin),
       (s, d) => {
-        val (inDir, inSchema) = pinnedLanding(s, s"$d/payload-ttl4",
-          "graft_payload_ttl_landing", {
-            val assets = payloads(s, d)
-            (0 to 3).map(b => assets.filter(pmod(col("doc_id"), lit(4)) === b))
-          })
+        val (inDir, inSchema) = pinnedLanding(s, s"$d/payload-ttl4", {
+          val assets = payloads(s, d)
+          (0 to 3).map(b => assets.filter(pmod(col("doc_id"), lit(4)) === b))
+        })
         val base = Scratch.dir("graft_payload_ttl_idx_")
         val ck = checkpointDir("graft_payload_ttl_ck_")
         runToEnd(s) {

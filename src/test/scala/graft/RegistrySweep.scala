@@ -1,27 +1,35 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
-import graft.ops.{Pin, PlanAudit}
+import graft.ops.PlanAudit
 
 /** What the registry-wide tests check about one query, all from ONE
-  * build: the Pin budget counters and the plan are read before any
-  * action on the frame, the row count after them. */
+  * build: the plan is read before any action on the frame, the row
+  * count after it, and what outlived the query's `Runner.run` after
+  * that returned. */
 final case class QueryFacts(
-    pins: Int,
-    maxCkLive: Int,
     plan: String,
     unpartitionedWindows: Seq[String],
     fullWidthScans: Seq[String],
-    rows: Long)
+    rows: Long,
+    leftoverRdds: Seq[Int] = Nil,
+    leftoverDirs: Seq[String] = Nil)
 
 /** Builds every registered query once per test JVM and records the facts
-  * the registry-wide tests of PlanQualitySpec, OpsSpec, PinBudgetSpec
-  * and CkBudgetSpec check. A new registry-wide invariant adds a fact
-  * here instead of another loop over the registry. */
+  * the registry-wide tests of PlanQualitySpec, OpsSpec and
+  * QueryScopeSpec check. A new registry-wide invariant adds a fact here
+  * instead of another loop over the registry. */
 object RegistrySweep {
 
   private val sf = "/root/testdata/sf0.001"
+
+  /** The scale-factor dir every registry-wide test builds at. */
+  def sfDir: String = sf
 
   /** Column count of each wide table whose full-width scan the
     * column-pruning test rejects. */
@@ -33,16 +41,33 @@ object RegistrySweep {
   def sweep(spark: SparkSession, sfDir: String, queries: Seq[QueryDef])
       : Seq[(String, Either[String, QueryFacts])] =
     queries.map { q =>
-      Pin.resetBudget()
+      val (rdds, dirs) = (persistentRdds(spark), scratchDirs())
       q.name -> Runner.run("sweep", spark, sfDir, q) { df =>
-        val pins = Pin.pinsSinceReset
-        val ckLive = Pin.maxCkLiveSinceReset
         val plan = df.queryExecution.executedPlan.treeString
         val windows = PlanAudit.unpartitionedWindows(df)
         val scans = PlanAudit.fullWidthScans(df, tableWidths)
-        QueryFacts(pins, ckLive, plan, windows, scans, df.count())
-      }.left.map(e => String.valueOf(e.getMessage))
+        QueryFacts(plan, windows, scans, df.count())
+      }.map(_.copy(
+        leftoverRdds = (persistentRdds(spark) -- rdds).toSeq.sorted,
+        leftoverDirs = (scratchDirs() -- dirs).toSeq.sorted))
+        .left.map(e => String.valueOf(e.getMessage))
     }
+
+  /** The ids of the RDDs `spark` holds persisted or checkpointed. */
+  def persistentRdds(spark: SparkSession): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** The `graft_*` entries of java.io.tmpdir and /dev/shm, except the
+    * per-JVM fixture roots. */
+  def scratchDirs(): Set[String] =
+    Seq(System.getProperty("java.io.tmpdir"), "/dev/shm").map(Paths.get(_))
+      .filter(Files.isDirectory(_)).flatMap { root =>
+        val s = Files.list(root)
+        try s.iterator.asScala.map(_.toString).toList finally s.close()
+      }.filter { p =>
+        val name = Paths.get(p).getFileName.toString
+        name.startsWith("graft_") && !name.startsWith("graft_fixtures_")
+      }.toSet
 
   /** The whole registry at sf0.001 on the shared test session. */
   lazy val registry: Seq[(String, Either[String, QueryFacts])] =

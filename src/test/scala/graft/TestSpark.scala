@@ -7,9 +7,9 @@ import org.apache.spark.sql.SparkSession
 import graft.core.{Scratch, Session}
 
 /** One shared local session for all suites, and one scratch root per
-  * test JVM that Scratch's shutdown hook removes. */
+  * test JVM under Scratch's fixture root, removed at JVM exit. */
 object TestSpark {
-  private lazy val root = Paths.get(Scratch.dir("graft_test_"))
+  private lazy val root = Paths.get(Scratch.fixture("test_root")(identity))
 
   /** A fresh empty directory under this JVM's scratch root. */
   def tmpDir(prefix: String): Path = Files.createTempDirectory(root, prefix)

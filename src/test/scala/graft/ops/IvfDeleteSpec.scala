@@ -80,8 +80,11 @@ class IvfDeleteSpec extends AnyFunSuite {
     val touched = VectorOps.assignClusters(removed, centroids)
       .select("cid").distinct().collect().map(_.getLong(0)).toSet
     val before = allFiles(path)
+    def staging = graft.RegistrySweep.scratchDirs().filter(_.contains("graft_ivf_vacuum_"))
+    val stagingBefore = staging
     VectorOps.vacuumIvfIndex(spark, path)
 
+    assert(staging == stagingBefore, "the vacuum's staging dir must be deleted")
     assert(!new java.io.File(s"$path/_deletes").exists(), "sidecar must be dropped")
     val after = allFiles(path)
     val untouchedBefore = before.filter { case (rel, _) =>
@@ -165,14 +168,5 @@ class IvfDeleteSpec extends AnyFunSuite {
       vectors.filter(pmod(col("vec_id"), lit(3)) =!= 0), centroids, rebuilt)
     assert(rows(VectorOps.probeIvfIndex(spark, store, probes, k = 3)) ==
       rows(VectorOps.probeIvfIndex(spark, rebuilt, probes, k = 3)))
-  }
-
-  test("DPP probe subtracts tombstones too") {
-    val path = newIndex("graft_ivfdel_dpp_")
-    VectorOps.tombstoneIvfDelete(removed, centroids, path)
-    val mor = rows(VectorOps.probeIvfIndex(spark, path, probes, k = 3))
-    val dpp = rows(VectorOps.probeIvfIndexDpp(spark, path, probes, k = 3))
-    assert(dpp == mor)
-    assert(!dpp.exists(_._2 % 7 == 0))
   }
 }

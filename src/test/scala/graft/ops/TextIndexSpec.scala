@@ -98,7 +98,10 @@ class TextIndexSpec extends AnyFunSuite {
     val newV = edited.select(col("doc_id"),
       concat_ws(" ", col("text"), col("text")).as("text"))
     val out = fresh("graft_ti_rev_out_")
+    def tombDirs = graft.RegistrySweep.scratchDirs().filter(_.contains("graft_txt_rev_tomb_"))
+    val tombsBefore = tombDirs
     TextIndex.reVersionTextIndex(spark, edited, newV, dir, out)
+    assert(tombDirs == tombsBefore, "the re-version's tombstone dir must be deleted")
     val rebuilt = fresh("graft_ti_rev_full_")
     TextIndex.buildTextIndex(
       docs.filter(col("doc_id") % 20 =!= 7).unionByName(newV), rebuilt)

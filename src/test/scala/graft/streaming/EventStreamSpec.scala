@@ -60,54 +60,6 @@ class EventStreamSpec extends AnyFunSuite {
     assert(got.count() >= batch.count() - 2)
   }
 
-  test("sessionWindowStats agrees with the stateful sessionizer on session counts") {
-    import org.apache.spark.sql.functions._
-    val ev = graft.Tables.events(spark, sfDir)
-
-    // batch mode: session_window works on a plain DataFrame
-    val declarative = EventStream.sessionWindowStats(ev, gapMinutes = 30)
-      .groupBy("user_id").agg(count(lit(1)).as("n_sessions"),
-        sum("n_events").as("n_events"))
-
-    // the ev03 lag-based formulation (oracle-checked) as ground truth
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy("ts", "event_id")
-    val us = unix_micros(col("ts"))
-    val lagBased = ev
-      .select(col("user_id"), col("event_id"),
-        when(us - lag(us, 1).over(w) > 1800000000L, 1L).otherwise(0L).as("new_sess"))
-      .groupBy("user_id")
-      .agg((lit(1) + sum("new_sess")).as("n_sessions"), count(lit(1)).as("n_events"))
-
-    val diff = declarative.join(lagBased, "user_id")
-      .filter(declarative("n_sessions") =!= lagBased("n_sessions") ||
-        declarative("n_events") =!= lagBased("n_events"))
-    assert(declarative.count() == lagBased.count())
-    assert(diff.count() == 0)
-  }
-
-  test("enrichedCounts: stream-static dimension join matches the batch equivalent") {
-    import spark.implicits._
-    val dim = (0L until 200L).map(u => (u, if (u % 3 == 0) "gold" else "std"))
-      .toDF("dim_user", "segment")
-    val stream = EventStream.readEvents(spark, streamDir)
-    val q = EventStream.enrichedCounts(stream, dim, "dim_user", "segment")
-      .writeStream.outputMode("append").format("memory").queryName("enriched").start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    val got = spark.table("enriched")
-
-    val batch = graft.Tables.events(spark, sfDir)
-      .join(dim, col("user_id") === col("dim_user"))
-      .groupBy(window(col("ts"), "1 hour"), col("segment"))
-      .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-      .select(col("window.start").as("window_start"), col("segment"),
-        col("n"), col("sum_value"))
-
-    assert(got.count() > 0)
-    assert(got.exceptAll(batch).count() == 0)
-    assert(got.count() >= batch.count() - 2)
-  }
-
   test("clickToPurchase: stream-stream interval join matches the batch equivalent") {
     val stream = EventStream.readEvents(spark, streamDir)
     val q = EventStream.clickToPurchase(stream, windowMinutes = 60)
@@ -186,45 +138,6 @@ class EventStreamSpec extends AnyFunSuite {
     try { q.processAllAvailable() } finally { q.stop() }
     val expected = spark.read.parquet(s"$sfDir/events.parquet").count()
     assert(spark.table("deduped").count() == expected)
-  }
-
-  test("slidingCounts: streaming sliding windows match the batch equivalent") {
-    val stream = EventStream.readEvents(spark, streamDir)
-    val q = EventStream.slidingCounts(stream, slideMinutes = 15)
-      .writeStream.outputMode("append").format("memory").queryName("sliding").start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    val got = spark.table("sliding")
-
-    val batch = graft.Tables.events(spark, sfDir)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n"))
-
-    assert(got.count() > 0)
-    // every sealed emitted window must equal its batch counterpart
-    assert(got.exceptAll(batch).count() == 0)
-    // the last ~2 hours of 15-min-slide windows (≤12 per event type
-    // present there) may be unsealed at end-of-input; everything else is
-    assert(got.count() >= batch.count() - 12)
-  }
-
-  test("nearDupStream: near-identical texts collapse to one per fingerprint") {
-    // stage the same file twice → every record's text arrives at least
-    // twice; whitespace/case variants also share a fingerprint
-    val dupDir = TestSpark.tmpDir("graft_stream_neardup_")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"), dupDir.resolve("a.parquet"))
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"), dupDir.resolve("b.parquet"))
-    val stream = EventStream.readEvents(spark, dupDir.toString)
-    val q = EventStream.nearDupStream(stream, "props")
-      .writeStream.outputMode("append").format("memory").queryName("neardup").start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    // one survivor per distinct normalized text
-    val expected = spark.read.parquet(s"$sfDir/events.parquet")
-      .select(regexp_replace(lower(trim(col("props"))), "\\s+", " ").as("t"))
-      .distinct().count()
-    assert(spark.table("neardup").count() == expected)
   }
 
   test("sessionize: closed sessions respect the gap and cover the data") {

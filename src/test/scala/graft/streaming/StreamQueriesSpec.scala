@@ -152,7 +152,7 @@ class StreamQueriesSpec extends AnyFunSuite {
       (1 to n).map(j => (i * 10L + j, s"text $j")).toDF("doc_id", "text")
     }
     val key = s"pinned-landing-spec-${System.nanoTime()}"
-    val (dir, schema) = StreamQueries.pinnedLanding(spark, key, "graft_pinned_spec", slices)
+    val (dir, schema) = StreamQueries.pinnedLanding(spark, key, slices)
     val files = new java.io.File(dir).listFiles().sortBy(_.getName).toSeq
     assert(files.map(_.getName) == Seq("b0.parquet", "b1.parquet", "b2.parquet"))
     val mtimes = files.map(_.lastModified)
@@ -161,7 +161,7 @@ class StreamQueriesSpec extends AnyFunSuite {
     assert(files.map(f => spark.read.parquet(f.getPath).count()) == sizes.map(_.toLong))
     assert(schema.fieldNames.toSeq == Seq("doc_id", "text"))
     // built once per key: a second request never re-stages
-    assert(StreamQueries.pinnedLanding(spark, key, "graft_pinned_spec",
+    assert(StreamQueries.pinnedLanding(spark, key,
       sys.error("re-staged a cached landing"))._1 == dir)
   }
 }
