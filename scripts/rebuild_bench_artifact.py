@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Rebuild a graft.Bench full artifact from a run's saved stderr+stdout
 logs. Needed when a later bench run overwrote an earlier (cleaner)
-run's SPARK_GRAFT_BENCH_OUT file: every per-query min, run list, phase
+run's SPARK_GRAFT_BENCH_OUT file (default /tmp/graft-bench-full.json): every per-query min, run list, phase
 split and sentinel pass is in the [bench] stderr lines, and the
 sentinel verdict is recomputed HERE with the same rule Bench ships
 (max pass / true-median pass > 1.3, or — ONLY on the reference config

@@ -272,8 +272,9 @@ object Bench {
 
     // Full artifact: everything the 2000-char stdout line cannot carry
     // (all per-query mins + runs + phase splits + the sentinel record).
+    // The default name stays outside the `graft_*` scratch-dir namespace.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "/tmp/graft_bench_full.json")
+      "/tmp/graft-bench-full.json")
     try {
       val perQuery = results.map { case (n, v, phases) =>
         val ph = if (phases.isEmpty) ""

@@ -1,7 +1,13 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchemas
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types.StructType
 
 /** A merge failed in a way the reference surfaces as a per-batch error
@@ -16,7 +22,9 @@ final class MergeException(msg: String) extends RuntimeException(msg)
   * buffers every record batch in RAM, single-threaded):
   *  - Each file's footer is probed once, on the driver, and the probed
   *    schemas decide the one schema the batch is read with
-  *    ([[readSchema]]), before any row is read (main.rs:549-578).
+  *    ([[readSchema]]), before any row is read (main.rs:549-578). A
+  *    batch's footers are read together by Spark's parallel footer
+  *    reader ([[probeSchemas]]), with no Spark job.
   *  - Every batch, identical or drifted, is then read by ONE multi-path
   *    parquet scan under that schema (one `FileSourceScanExec` that
   *    bin-packs splits across executors), never by N union legs: the
@@ -28,14 +36,45 @@ final class MergeException(msg: String) extends RuntimeException(msg)
   *  - `singleFile = true` mirrors the reference's one-output-file
   *    contract via `coalesce(1)` (narrow, no shuffle). At 100 TB pass
   *    `singleFile = false` and the write stays fully parallel.
+  *  - The sink runs one job per output: the row count is observed
+  *    inside the parquet write, and the CSV export reads the merged
+  *    output back under the schema it was written with.
   */
 object Merge {
 
-  /** Footer-only schema probe (main.rs:433-437); raises the reference's
-    * "Cannot read schema from" error (main.rs:557-561) on failure. */
+  /** One file's schema (main.rs:433-437) through Spark's data source, as
+    * `spark.read.parquet(file).schema`; raises the reference's "Cannot
+    * read schema from" error (main.rs:557-561) on failure. Batches go
+    * through [[probeSchemas]], which falls back to this per file. */
   def probeSchema(spark: SparkSession, file: String): StructType =
     try spark.read.parquet(file).schema
     catch { case _: Exception => throw new MergeException(s"Cannot read schema from: $file") }
+
+  /** The schemas of `files`, in order, each equal to [[probeSchema]]'s,
+    * read from their footers in one parallel pass on the driver with no
+    * Spark job. When a file cannot be stat-ed or a footer cannot be read,
+    * the files are probed one by one instead, so the error names the
+    * first unreadable file. */
+  def probeSchemas(spark: SparkSession, files: Seq[String]): Seq[StructType] =
+    probeSchemas(spark, files, files.map(status(spark, _)))
+
+  /** [[probeSchemas]] over `statuses` the caller already took (None for a
+    * file that could not be stat-ed), one per file of `files`. */
+  private[core] def probeSchemas(
+      spark: SparkSession,
+      files: Seq[String],
+      statuses: Seq[Option[FileStatus]]): Seq[StructType] = {
+    val footers =
+      if (statuses.exists(_.isEmpty)) None
+      else Try(FooterSchemas.read(spark, statuses.flatten)).toOption
+    footers.getOrElse(files.map(probeSchema(spark, _)))
+  }
+
+  /** The file's status, or None when it cannot be stat-ed (e.g. gone). */
+  private[core] def status(spark: SparkSession, file: String): Option[FileStatus] = Try {
+    val p = new Path(file)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+  }.toOption
 
   /** The schema a batch is read with: the first schema when all are
     * compatible (positional UNION ALL, main.rs:564-569), otherwise the
@@ -54,7 +93,7 @@ object Merge {
   /** Aligned UNION ALL over parquet `files` as a lazy DataFrame: one
     * scan of every file under [[readSchema]] of their footers. */
   def alignedUnion(spark: SparkSession, files: Seq[String]): DataFrame =
-    spark.read.schema(readSchema(files.map(probeSchema(spark, _)))).parquet(files: _*)
+    spark.read.schema(readSchema(probeSchemas(spark, files))).parquet(files: _*)
 
   /** Aligned UNION ALL over already-loaded DataFrames — same alignment
     * as [[alignedUnion]] for in-memory composition: compatible inputs
@@ -94,13 +133,13 @@ object Merge {
       format: String = "parquet",
       options: Map[String, String] = Map.empty): Unit = {
     val spark   = df.sparkSession
-    val staging = new org.apache.hadoop.fs.Path(dest + ".__staging__")
-    val tmp     = new org.apache.hadoop.fs.Path(dest + ".__tmp__")
-    val old     = new org.apache.hadoop.fs.Path(dest + ".__old__")
-    val target  = new org.apache.hadoop.fs.Path(dest)
+    val staging = new Path(dest + ".__staging__")
+    val tmp     = new Path(dest + ".__tmp__")
+    val old     = new Path(dest + ".__old__")
+    val target  = new Path(dest)
     val fs      = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Hadoop rename/delete report failure via return value (or throw)
-    def moved(from: org.apache.hadoop.fs.Path, to: org.apache.hadoop.fs.Path) =
+    def moved(from: Path, to: Path) =
       try fs.rename(from, to) catch { case _: java.io.IOException => false }
     // Staging (and the temp sibling) are cleaned up on EVERY exit path.
     // An existing target is renamed aside, not deleted, before the new
@@ -139,19 +178,24 @@ object Merge {
 
   /** Full merge job: writes the aligned batch `df` (see [[alignedUnion]])
     * to the parquet sink and returns rows written (main.rs:601-613
-    * returns the same count). `singleFile = true` produces one plain
-    * parquet FILE like the reference; `false` keeps Spark's fully
-    * parallel directory output for scale. */
+    * returns the same count), as counted by an `Observation` inside the
+    * write's own job. `singleFile = true` produces one plain parquet FILE
+    * like the reference; `false` keeps Spark's fully parallel directory
+    * output for scale. The CSV export reads the output back under
+    * `df`'s schema, so it infers nothing. */
   def merge(
       df: DataFrame,
       outPath: String,
       singleFile: Boolean = true,
       csvPath: Option[String] = None): Long = {
-    val spark = df.sparkSession
-    if (singleFile) writeSingleFile(df, outPath)
-    else df.write.mode("overwrite").parquet(outPath)
-    csvPath.foreach(p => exportCsv(spark, outPath, p, singleFile))
-    spark.read.parquet(outPath).count()
+    val spark    = df.sparkSession
+    val rows     = Observation()
+    val observed = df.observe(rows, count(lit(1)).as("rows"))
+    if (singleFile) writeSingleFile(observed, outPath)
+    else observed.write.mode("overwrite").parquet(outPath)
+    csvPath.foreach(p => writeCsv(spark.read.schema(df.schema).parquet(outPath), p, singleFile))
+    // the observed row arrives through the listener bus once the write is done
+    Await.result(rows.future, 10.minutes).getAs[Long]("rows")
   }
 
   /** Small-file compaction — the reference's merge workflow stated as
@@ -177,7 +221,7 @@ object Merge {
     require(targetBytes > 0, "targetBytes must be positive")
     val conf = spark.sparkContext.hadoopConfiguration
     val totalBytes = files.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
+      val p = new Path(f)
       p.getFileSystem(conf).getFileStatus(p).getLen
     }.sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
@@ -201,8 +245,11 @@ object Merge {
       spark: SparkSession,
       parquetPath: String,
       csvPath: String,
-      singleFile: Boolean = true): Unit = {
-    val df       = spark.read.parquet(parquetPath)
+      singleFile: Boolean = true): Unit =
+    writeCsv(spark.read.parquet(parquetPath), csvPath, singleFile)
+
+  /** [[exportCsv]] of an already-read merged parquet `df`. */
+  private def writeCsv(df: DataFrame, csvPath: String, singleFile: Boolean): Unit = {
     val internal = df.columns.filter(SchemaAlign.isInternalColumn)
     val clean    = df.drop(internal.toIndexedSeq: _*)
     // RFC-4180 quote doubling like the reference's escape_csv_field

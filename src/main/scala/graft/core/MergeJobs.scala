@@ -2,7 +2,7 @@ package graft.core
 
 import scala.util.Try
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
@@ -10,11 +10,15 @@ import org.apache.spark.sql.types.StructType
   * built. */
 final case class FileStamp(length: Long, modificationTime: Long)
 
+object FileStamp {
+  def of(status: FileStatus): FileStamp = FileStamp(status.getLen, status.getModificationTime)
+}
+
 /** A planned merge batch (reference `Batch`, main.rs:46-54) and the
   * snapshot [[MergeJobs.buildJob]] took of it: the schema the batch will
-  * be read with, or the probe's error (`readSchema`), and each file's
-  * stamp in `files` order (`stamps`; None for a file that could not be
-  * stat-ed).
+  * be read with, decided from every file's footer on the driver, or the
+  * probe's error (`readSchema`), and each file's stamp in `files` order
+  * (`stamps`; None for a file that could not be stat-ed).
   *
   * The snapshot is the contract [[MergeJobs.runAll]] merges under: it
   * reads the files with `readSchema` without probing them again, so it
@@ -38,29 +42,24 @@ final case class MergeResult(job: MergeJob, rows: Long)
 object MergeJobs {
 
   /** W1 `add_batch` (main.rs:184-228): sort files (main.rs:190-191),
-    * stat and probe every file once, generate a name from the file
-    * stems. `hasSchemaMismatch` follows W4 `check_schema_mismatch`
-    * (main.rs:408-430): fewer than 2 files is never a mismatch; every
-    * file is compared against the first; an unreadable footer counts as
-    * a mismatch. */
+    * stat every file once, read all their footers in one parallel pass
+    * on the driver with no Spark job ([[Merge.probeSchemas]]), generate a
+    * name from the file stems. `hasSchemaMismatch` follows W4
+    * `check_schema_mismatch` (main.rs:408-430): fewer than 2 files is
+    * never a mismatch; every file is compared against the first; an
+    * unreadable footer counts as a mismatch. */
   def buildJob(spark: SparkSession, files: Seq[ParquetFileRef], batchNumber: Int): MergeJob = {
     val sorted = files.sortBy(_.displayPath)
     val paths  = sorted.map(_.fullPath)
     val stems  = sorted.map(f => Naming.stem(Discovery.fileName(f.fullPath)))
     // stat before the footer read, so a rewrite in between shows at merge time
-    val stamps   = paths.map(stat(spark, _))
-    val schemas  = Try(paths.map(Merge.probeSchema(spark, _)))
+    val statuses = paths.map(Merge.status(spark, _))
+    val stamps   = statuses.map(_.map(FileStamp.of))
+    val schemas  = Try(Merge.probeSchemas(spark, paths, statuses))
     val mismatch = paths.size >= 2 && schemas.fold(_ => true, s => !SchemaAlign.allCompatible(s))
     val read     = schemas.flatMap(s => Try(Merge.readSchema(s))).toEither.left.map(_.getMessage)
     MergeJob(Naming.generateBatchName(stems, batchNumber), sorted, mismatch, read, stamps)
   }
-
-  /** The file's stamp, or None when it cannot be stat-ed (e.g. gone). */
-  private def stat(spark: SparkSession, file: String): Option[FileStamp] = Try {
-    val p  = new Path(file)
-    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
-    FileStamp(st.getLen, st.getModificationTime)
-  }.toOption
 
   /** W3 `merge_batches` loop (main.rs:298-404): outputs land under
     * `outDir/merged/<sanitized-name>.parquet` (dir main.rs:322-329, path
@@ -90,7 +89,7 @@ object MergeJobs {
         val schema = job.readSchema.fold(e => throw new MergeException(e), identity)
         val paths  = job.files.map(_.fullPath)
         paths.zip(job.stamps).foreach { case (p, s) =>
-          if (stat(spark, p) != s)
+          if (Merge.status(spark, p).map(FileStamp.of) != s)
             throw new MergeException(s"File changed since its batch was built: $p")
         }
         usedDests += dest

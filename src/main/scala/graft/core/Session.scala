@@ -1,5 +1,7 @@
 package graft.core
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** What a graft session is. Every oracle hash depends on two settings:
@@ -20,6 +22,10 @@ object Session {
       .config(extra.toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // every deliberate release of a local checkpoint (a query scope
+    // closing, a loop kernel dropping its last round) warns that the RDD
+    // "cannot be recomputed after unpersisting"; it says nothing new
+    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
     spark
   }
 

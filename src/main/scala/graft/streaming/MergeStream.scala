@@ -30,9 +30,11 @@ object MergeStream {
     * later arrivals.
     *
     * @param schema     fixed source schema — probe one input with
-    *                   [[Merge.probeSchema]] (file sources need the
-    *                   schema up front; drifting files surface as nulls
-    *                   or read errors rather than silent column loss)
+    *                   [[Merge.probeSchema]], or a batch of inputs with
+    *                   [[Merge.probeSchemas]] and [[Merge.readSchema]]
+    *                   (file sources need the schema up front; drifting
+    *                   files surface as nulls or read errors rather than
+    *                   silent column loss)
     */
   def continuousMerge(
       spark: SparkSession,

@@ -48,4 +48,10 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Blocks until every listener event posted so far has been delivered
+    * (`listenerBus` is `private[spark]`) — lets tests count the jobs an
+    * action started without waiting on a clock. */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -1,11 +1,19 @@
 package graft.core
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -24,6 +32,48 @@ class MergeSpec extends AnyFunSuite {
     Merge.writeSingleFile(df, dest)
 
   private def ref(path: String) = ParquetFileRef(path, Discovery.fileName(path))
+
+  /** Runs `body` and returns what it gave with one entry per Spark job it
+    * started: the command line of the SQL execution the job ran under
+    * (e.g. "Execute InsertIntoHadoopFsRelationCommand ..."), or "" for a
+    * job outside one. Jobs of other threads are not counted. */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val tag   = java.util.UUID.randomUUID().toString
+    val plans = new ConcurrentHashMap[Long, String]
+    val jobs  = new ConcurrentLinkedQueue[Option[Long]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("graft.test.jobs") == tag)
+          jobs.add(Option(e.properties.getProperty("spark.sql.execution.id")).map(_.toLong))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.put(s.executionId, s.sparkPlanInfo.simpleString)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.jobs", tag)
+    try {
+      val out = body
+      Bridge.drainListenerBus(spark)
+      (out, jobs.asScala.toSeq.map(_.flatMap(id => Option(plans.get(id))).getOrElse("")))
+    } finally {
+      sc.setLocalProperty("graft.test.jobs", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** The file format a job's command line writes, or the line itself. */
+  private def writeKind(line: String): String =
+    if (!line.startsWith("Execute InsertIntoHadoopFsRelationCommand")) line
+    else line.split(", ").find(Set("Parquet", "CSV")).getOrElse(line)
+
+  /** `n` plain parquet files of `df`'s rows, written by one job. */
+  private def writeParts(df: DataFrame, n: Int, dir: String): Seq[String] = {
+    df.repartition(n).write.parquet(dir)
+    new java.io.File(dir).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).sorted.toSeq
+  }
 
   test("B1 identical: positional union, row count = sum of inputs") {
     writeSingle(Seq((1L, "x", 1.5), (2L, "y", 2.5)).toDF("id", "name", "score"), s"$root/b1/f1.parquet")
@@ -114,6 +164,126 @@ class MergeSpec extends AnyFunSuite {
     writeSingle(Seq(Tuple1(1L)).toDF("a"), s"$root/b9/ok.parquet")
     assert(MergeJobs.buildJob(spark, Seq(bad, s"$root/b9/ok.parquet").map(ref), 1).hasSchemaMismatch)
     assert(!MergeJobs.buildJob(spark, Seq(ref(s"$root/b9/ok.parquet")), 1).hasSchemaMismatch)
+  }
+
+  test("probed schemas equal spark.read.parquet(f).schema for every footer type") {
+    val spec = StructType(Seq(
+      StructField("req", LongType, nullable = false),
+      StructField("tagged", StringType, nullable = true,
+        new MetadataBuilder().putString("comment", "kept").putLong("width", 7).build())))
+    val frames = Seq(
+      "numbers" -> Seq((1, 2L, 3.5, BigDecimal("1.25"), BigDecimal("123456789012345678.9")))
+        .toDF("i32", "i64", "dbl", "dec", "wide")
+        .select(col("i32"), col("i64"), col("dbl"), col("dec").cast("decimal(10,2)"),
+          col("wide").cast("decimal(38,10)"), lit(1.toByte).as("i8"), lit(2.toShort).as("i16"),
+          lit(1.5f).as("f32")),
+      "text" -> Seq(("s", Array[Byte](1, 2), true)).toDF("str", "bin", "flag"),
+      "times" -> Seq((java.sql.Date.valueOf("2024-02-29"),
+          java.sql.Timestamp.valueOf("2024-02-29 12:34:56.789"),
+          java.time.LocalDateTime.parse("2024-02-29T12:34:56.789")))
+        .toDF("d", "ts", "ntz"),
+      "nested" -> Seq((1L, (2, "x"), Seq(1.0, 2.0), Map("k" -> Seq(3L))))
+        .toDF("id", "st", "arr", "mp"),
+      "required" -> spark.createDataFrame(java.util.List.of(Row(1L, "m")), spec))
+    val files = frames.map { case (name, df) =>
+      val p = s"$root/types/$name.parquet"
+      writeSingle(df, p)
+      p
+    }
+    val int96 = s"$root/types/int96.parquet"
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try writeSingle(Seq(java.sql.Timestamp.valueOf("2024-02-29 12:34:56")).toDF("ts96"), int96)
+    finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    // written by another parquet writer: no Spark schema in the footer
+    val foreign = getClass.getResource("/uint_fixture.parquet").getPath
+    val all = files :+ int96 :+ foreign
+    val expected = all.map(spark.read.parquet(_).schema)
+    assert(expected.last.nonEmpty)
+    assert(expected(4).fields.map(_.metadata.contains("comment")).toSeq == Seq(false, true))
+    assert(Merge.probeSchemas(spark, all) == expected)
+    all.zip(expected).foreach { case (f, schema) =>
+      assert(MergeJobs.buildJob(spark, Seq(ref(f)), 1).readSchema == Right(schema), f)
+    }
+    // a batch of several files: the read schema (or its error) of
+    // aligning the per-file schemas
+    def aligned(schemas: Seq[StructType]) =
+      Try(Merge.readSchema(schemas)).toEither.left.map(_.getMessage)
+    assert(MergeJobs.buildJob(spark, all.map(ref), 1).readSchema == aligned(expected))
+    val same = Seq(files(3), s"$root/types/nested2.parquet")
+    writeSingle(frames(3)._2, same(1))
+    val sameJob = MergeJobs.buildJob(spark, same.map(ref), 1)
+    assert(sameJob.readSchema.isRight)
+    assert(sameJob.readSchema == aligned(same.map(spark.read.parquet(_).schema)))
+  }
+
+  test("buildJob: an unreadable or deleted file is a Left naming it, and a mismatch") {
+    writeSingle(Seq((1L, "a")).toDF("id", "t"), s"$root/unread/ok.parquet")
+    val ok   = s"$root/unread/ok.parquet"
+    val bad  = s"$root/unread/bad.parquet"
+    val gone = s"$root/unread/gone.parquet"
+    Files.write(java.nio.file.Paths.get(bad), "not parquet".getBytes)
+    writeSingle(Seq((2L, "b")).toDF("id", "t"), gone)
+    new java.io.File(gone).delete()
+    for (f <- Seq(bad, gone)) {
+      val job = MergeJobs.buildJob(spark, Seq(ref(f), ref(ok)), 1)
+      assert(job.readSchema == Left(s"Cannot read schema from: $f"))
+      assert(job.hasSchemaMismatch)
+      val e = intercept[MergeException](Merge.probeSchemas(spark, Seq(ok, f)))
+      assert(e.getMessage == s"Cannot read schema from: $f")
+    }
+  }
+
+  test("buildJob over 50 files starts no Spark job") {
+    val plain = writeParts((1 to 500).map(i => (i.toLong, s"r$i")).toDF("id", "t"), 25,
+      s"$root/nojobs/plain")
+    val wide = writeParts((1 to 500).map(i => (s"w$i", i.toLong, i * 0.5)).toDF("t", "id", "x"), 25,
+      s"$root/nojobs/wide")
+    val files = plain ++ wide
+    assert(files.size == 50)
+    val (job, jobs) = jobsOf(MergeJobs.buildJob(spark, files.map(ref), 1))
+    assert(jobs.isEmpty, jobs.mkString("\n"))
+    assert(job.hasSchemaMismatch)
+    assert(job.readSchema == Right(Merge.readSchema(job.files.map(f => spark.read.parquet(f.fullPath).schema))))
+    assert(job.readSchema.map(_.fieldNames.toSet) == Right(Set("id", "t")))
+  }
+
+  test("runAll(exportCsv) starts one parquet-write and one CSV-write job per batch") {
+    writeSingle(Seq((1L, "a"), (2L, "b")).toDF("id", "t"), s"$root/onejob/x/same.parquet")
+    writeSingle(Seq((3L, "c")).toDF("id", "t"), s"$root/onejob/y/same.parquet")
+    writeSingle(Seq((1L, "p", 7)).toDF("id", "t", "extra"), s"$root/onejob/x/drift.parquet")
+    writeSingle(Seq(("q", 2L)).toDF("t", "id"), s"$root/onejob/y/drift.parquet")
+    val files = Discovery.scanFolders(spark, Seq(s"$root/onejob/x", s"$root/onejob/y"))
+    val (groups, _) = Discovery.smartBatch(files)
+    val jobs = groups.zipWithIndex.map { case ((_, fs), i) => MergeJobs.buildJob(spark, fs, i + 1) }
+    assert(jobs.map(_.hasSchemaMismatch) == Seq(true, false))
+    val ((outcomes, _), started) =
+      jobsOf(MergeJobs.runAll(spark, jobs, s"$root/onejob/out", exportCsv = true))
+    assert(outcomes.map(_.map(_.rows)) == Seq(Right(2L), Right(3L)))
+    assert(started.map(writeKind) == Seq("Parquet", "CSV", "Parquet", "CSV"), started.mkString("\n"))
+  }
+
+  test("MergeResult.rows equals the written output's count") {
+    val dir = s"$root/rows"
+    writeSingle(Seq((1L, "a"), (2L, "b")).toDF("id", "t"), s"$dir/x/fast.parquet")
+    writeSingle(Seq((3L, "c")).toDF("id", "t"), s"$dir/y/fast.parquet")
+    writeSingle(Seq((1L, "p", 7), (2L, "q", 8)).toDF("id", "t", "extra"), s"$dir/x/drift.parquet")
+    writeSingle(Seq(("r", 3L), ("s", 4L), ("t", 5L)).toDF("t", "id"), s"$dir/y/drift.parquet")
+    writeSingle(Seq.empty[(Long, String)].toDF("id", "t"), s"$dir/x/empty.parquet")
+    writeSingle(Seq.empty[(Long, String)].toDF("id", "t"), s"$dir/y/empty.parquet")
+    val files = Discovery.scanFolders(spark, Seq(s"$dir/x", s"$dir/y"))
+    val (groups, _) = Discovery.smartBatch(files)
+    val jobs = groups.zipWithIndex.map { case ((_, fs), i) => MergeJobs.buildJob(spark, fs, i + 1) }
+    assert(jobs.map(_.name) == Seq("drift", "empty", "fast"))
+    for (single <- Seq(true, false)) {
+      val out = s"$dir/out-$single"
+      val (outcomes, _) = MergeJobs.runAll(spark, jobs, out, exportCsv = true, singleFile = single)
+      val rows = outcomes.map(_.fold(l => fail(l._2), r => r.job.name -> r.rows)).toMap
+      assert(rows == Map("drift" -> 5L, "empty" -> 0L, "fast" -> 3L))
+      rows.foreach { case (name, n) =>
+        assert(spark.read.parquet(s"$out/merged/$name.parquet").count() == n, name)
+        assert(spark.read.option("header", "true").csv(s"$out/merged/$name.csv").count() == n, name)
+      }
+    }
   }
 
   test("merge row count equals sum of input counts (property, multiple shapes)") {
