@@ -39,6 +39,10 @@ final class MergeException(msg: String) extends RuntimeException(msg)
   *  - The sink runs one job per output: the row count is observed
   *    inside the parquet write, and the CSV export reads the merged
   *    output back under the schema it was written with.
+  *  - [[MergeJobs.runAll]] merges a run's batches concurrently, so
+  *    the one-task writes of several single-file batches share the
+  *    cores: a deliberate deviation from the reference, which merges
+  *    one batch after another (main.rs:298-404).
   */
 object Merge {
 
@@ -188,14 +192,21 @@ object Merge {
       outPath: String,
       singleFile: Boolean = true,
       csvPath: Option[String] = None): Long = {
-    val spark    = df.sparkSession
-    val rows     = Observation()
-    val observed = df.observe(rows, count(lit(1)).as("rows"))
+    val spark            = df.sparkSession
+    val (observed, rows) = counted(df)
     if (singleFile) writeSingleFile(observed, outPath)
     else observed.write.mode("overwrite").parquet(outPath)
     csvPath.foreach(p => writeCsv(spark.read.schema(df.schema).parquet(outPath), p, singleFile))
-    // the observed row arrives through the listener bus once the write is done
-    Await.result(rows.future, 10.minutes).getAs[Long]("rows")
+    rows()
+  }
+
+  /** `df` with its rows counted by an `Observation` inside whatever job
+    * runs it, and the count, to be read once that job is done. */
+  private def counted(df: DataFrame): (DataFrame, () => Long) = {
+    val rows = Observation()
+    // the observed row arrives through the listener bus after the job
+    (df.observe(rows, count(lit(1)).as("rows")),
+      () => Await.result(rows.future, 10.minutes).getAs[Long]("rows"))
   }
 
   /** Small-file compaction — the reference's merge workflow stated as
@@ -212,7 +223,8 @@ object Merge {
     *  - `repartition` (round-robin shuffle) only when asked to *grow*
     *    the file count, where a shuffle is unavoidable for balance.
     *
-    * Returns (rows, outputFiles). */
+    * Returns (rows, outputFiles). The rows are counted inside the write,
+    * so a compaction runs one Spark job. */
   def compact(
       spark: SparkSession,
       files: Seq[String],
@@ -229,10 +241,9 @@ object Merge {
     val sized =
       if (nOut <= df.rdd.getNumPartitions) df.coalesce(nOut)
       else df.repartition(nOut)
-    sized.write.mode("overwrite").parquet(outPath)
-    val out = spark.read.parquet(outPath)
-    val parts = out.inputFiles.length
-    (out.count(), parts)
+    val (observed, rows) = counted(sized)
+    observed.write.mode("overwrite").parquet(outPath)
+    (rows(), spark.read.schema(df.schema).parquet(outPath).inputFiles.length)
   }
 
   /** CSV export of a merged parquet (main.rs:693-729): drop `__...__`

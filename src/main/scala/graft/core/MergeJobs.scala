@@ -1,5 +1,9 @@
 package graft.core
 
+import java.util.concurrent.{Callable, Executors, ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.hadoop.fs.FileStatus
@@ -69,7 +73,19 @@ object MergeJobs {
     * writes (two batches can get one name: `sales_2023` and
     * `sales_2024` both become `sales`); when
     * `autoRemoveCompleted` (reference default ON, main.rs:108, 380-385)
-    * the returned remaining-job list keeps only the failures. */
+    * the returned remaining-job list keeps only the failures.
+    *
+    * Every check that can fail a job before it writes (empty batch,
+    * output name taken, unreadable schema, file changed since
+    * [[buildJob]]) runs first, on the calling thread in job order. The
+    * jobs that pass are then merged concurrently, on a pool of
+    * min(jobs, `defaultParallelism`) threads this call makes and shuts
+    * down: a deliberate deviation from the reference's one-batch-at-a-time
+    * loop (main.rs:298-404), since a single-file batch writes through
+    * one task and would leave the other cores idle. The pool's threads
+    * are made on the calling thread, so they inherit its Spark local
+    * properties (job group, scheduler pool) and its [[QueryScope]].
+    * Outcomes are returned in job order. */
   def runAll(
       spark: SparkSession,
       jobs: Seq[MergeJob],
@@ -78,9 +94,13 @@ object MergeJobs {
       singleFile: Boolean = true,
       autoRemoveCompleted: Boolean = true)
       : (Seq[Either[(MergeJob, String), MergeResult]], Seq[MergeJob]) = {
+    type Outcome = Either[(MergeJob, String), MergeResult]
+    def attempt[T](job: MergeJob)(body: => T): Either[(MergeJob, String), T] =
+      try Right(body)
+      catch { case e: Exception => Left((job, Option(e.getMessage).getOrElse(e.toString))) }
     val usedDests = scala.collection.mutable.Set.empty[String]
-    val outcomes = jobs.map { job =>
-      try {
+    val planned = jobs.map { job =>
+      attempt(job) {
         if (job.files.isEmpty) throw new MergeException(s"No files found for batch: ${job.name}")
         val safe = Naming.sanitizeFilename(job.name)
         val dest = s"$outDir/merged/$safe.parquet"
@@ -93,14 +113,39 @@ object MergeJobs {
             throw new MergeException(s"File changed since its batch was built: $p")
         }
         usedDests += dest
-        val csv  = if (exportCsv) Some(s"$outDir/merged/$safe.csv") else None
-        val df   = spark.read.schema(schema).parquet(paths: _*)
-        Right(MergeResult(job, Merge.merge(df, dest, singleFile, csv)))
-      } catch {
-        case e: Exception => Left((job, Option(e.getMessage).getOrElse(e.toString)))
+        val csv = if (exportCsv) Some(s"$outDir/merged/$safe.csv") else None
+        val merge: Callable[Outcome] = () => attempt(job) {
+          MergeResult(job, Merge.merge(spark.read.schema(schema).parquet(paths: _*), dest,
+            singleFile, csv))
+        }
+        merge
       }
+    }
+    val ready = planned.collect { case Right(task) => task }
+    val merged = if (ready.isEmpty) Iterator.empty else {
+      val pool = Executors.newFixedThreadPool(
+        math.min(ready.size, spark.sparkContext.defaultParallelism), mergeThreads)
+      try pool.invokeAll(ready.asJava).asScala.map(_.get).toList.iterator
+      finally {
+        pool.shutdownNow()
+        pool.awaitTermination(1, TimeUnit.MINUTES)
+      }
+    }
+    val outcomes = planned.map {
+      case Left(failed) => Left(failed)
+      case Right(_)     => merged.next()
     }
     val remaining = if (autoRemoveCompleted) outcomes.collect { case Left((j, _)) => j } else jobs
     (outcomes, remaining)
+  }
+
+  /** Names [[runAll]]'s pool threads `graft-merge-N`, as daemons. */
+  private val mergeThreads: ThreadFactory = {
+    val n = new AtomicInteger
+    r => {
+      val t = new Thread(r, s"graft-merge-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
   }
 }

@@ -19,7 +19,7 @@ class ScalingSpec extends AnyFunSuite {
     assert(m.map(_._1).toSet == Set("dd02_minhash_lsh", "dd06_exact_ppjoin",
       "dd17_index_probe", "vs02_ivf_probe", "tx33_text_probe",
       "tx34_index_append", "tx36_index_vacuum", "dd20_index_delete",
-      "vs26_ivf_reversion", "tx43_bpe_train", "mm16_payload_minhash"))
+      "vs26_ivf_reversion", "tx43_bpe_train", "mm16_payload_minhash", "merge_files"))
     for ((name, points, exp) <- m) {
       assert(points.forall(_._2 > 0), s"$name: non-positive timing $points")
       assert(exp <= 1.7, s"$name exponent $exp (points $points) — " +
@@ -55,6 +55,12 @@ class ScalingSpec extends AnyFunSuite {
     // both this and the generic bound.
     assert(expOf("mm16_payload_minhash") <= 1.3,
       "mm16 payload kernel is growing faster than its linear-in-bytes design")
+    // the merge tool's own sequence is a listing, a stat and a footer
+    // read per file plus one write of every row: linear by design (0.83
+    // measured over 100/300/1000 files). Work per file that grew with
+    // the file count (a rescan per file, say) would read ~2.
+    assert(expOf("merge_files") <= 1.3,
+      "merge_files is growing faster than linearly in the file count")
     // tx36 vacuum / dd20 delete / vs26 re-version are O(index) /
     // O(touched cells) BY DESIGN — the generic <= 1.7 above is their
     // claim (sub-quadratic, never all-pairs); no tighter pin because

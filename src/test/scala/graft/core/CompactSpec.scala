@@ -32,8 +32,11 @@ class CompactSpec extends AnyFunSuite {
     val out = TestSpark.tmpDir("graft_compact_out_").resolve("compacted")
     val inputBytes = files.map(f => new java.io.File(f).length()).sum
     // target = ~1/3 of the input → expect about 3 output files
-    val (rows, nOut) = Merge.compact(spark, files, out.toString, inputBytes / 3)
+    val ((rows, nOut), jobs) =
+      TestSpark.jobsOf(Merge.compact(spark, files, out.toString, inputBytes / 3))
     assert(rows == totalRows)
+    // the rows are counted inside the write: no second job reads them back
+    assert(jobs.size == 1, jobs.mkString("\n"))
     assert(nOut >= 2 && nOut <= 4, s"expected ~3 output files, got $nOut")
     assert(nOut < files.size)
   }

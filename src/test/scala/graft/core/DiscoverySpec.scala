@@ -1,7 +1,11 @@
 package graft.core
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.hadoop.fs.{BlockLocation, FileStatus, LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -76,4 +80,115 @@ class DiscoverySpec extends AnyFunSuite {
     // and the scheme-qualified paths are directly readable
     assert(spark.read.parquet(files.head.fullPath).count() == 1)
   }
+
+  /** The listing `scanFolders` made with `listFiles(root, recursive =
+    * true)`, before it walked directories itself. */
+  private def listFilesWalk(roots: Seq[String]): Seq[ParquetFileRef] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val out  = ArrayBuffer.empty[ParquetFileRef]
+    roots.map(new Path(_)).map(p => p.getFileSystem(conf).makeQualified(p)).distinct.foreach { root =>
+      val fs     = root.getFileSystem(conf)
+      val prefix = root.toString.stripSuffix("/") + "/"
+      if (fs.exists(root)) {
+        val it = fs.listFiles(root, true)
+        while (it.hasNext) {
+          val st = it.next()
+          if (st.isFile && st.getPath.getName.toLowerCase.endsWith(".parquet")) {
+            val full = st.getPath.toString
+            out += ParquetFileRef(full,
+              if (full.startsWith(prefix)) full.substring(prefix.length) else st.getPath.getName)
+          }
+        }
+      }
+    }
+    out.sortBy(_.displayPath).toSeq
+  }
+
+  /** A three-level tree of same-named and distinct parquet files, with
+    * non-parquet files and an empty directory mixed in. */
+  private lazy val tree: String = {
+    val r = TestSpark.tmpDir("graft_disctree_").toString
+    for (a <- 0 until 3; b <- 0 until 2; c <- 0 until 2) {
+      val d = s"$r/a$a/b$b/c$c"
+      Merge.writeSingleFile(Seq((a * 100L + b * 10 + c, "x")).toDF("id", "t"), s"$d/part.parquet")
+      if (c == 0) Files.write(Paths.get(s"$d/notes.txt"), "x".getBytes)
+    }
+    Merge.writeSingleFile(Seq((7L, "x")).toDF("id", "t"), s"$r/a1/Top.PARQUET")
+    Files.createDirectories(Paths.get(s"$r/a2/empty"))
+    r
+  }
+
+  test("scan: a three-level tree lists what listFiles(recursive) listed, in the same order") {
+    val roots = Seq(tree, s"$tree/a1", s"$tree/a0/b1")
+    val files = Discovery.scanFolders(spark, roots)
+    assert(files.size == 12 + 1 + 5 + 2)
+    assert(files == listFilesWalk(roots))
+  }
+
+  test("scan: symlinked directories and files are followed, like follow_links(true)") {
+    val r = TestSpark.tmpDir("graft_disclinks_")
+    Merge.writeSingleFile(Seq((1L, "x")).toDF("id", "t"), s"$r/real/sub/a.parquet")
+    Merge.writeSingleFile(Seq((2L, "x")).toDF("id", "t"), s"$r/real/b.parquet")
+    val links = Files.createDirectories(r.resolve("links"))
+    Files.createSymbolicLink(links.resolve("dirlink"), r.resolve("real/sub"))
+    Files.createSymbolicLink(links.resolve("filelink.parquet"), r.resolve("real/b.parquet"))
+    val files = Discovery.scanFolders(spark, Seq(links.toString))
+    assert(files.map(_.displayPath) == Seq("dirlink/a.parquet", "filelink.parquet"))
+    assert(files.map(f => spark.read.parquet(f.fullPath).as[(Long, String)].head()._1) == Seq(1L, 2L))
+  }
+
+  test("scan: a root that is a file lists that file") {
+    val file = s"$root/folderA/sales.parquet"
+    val files = Discovery.scanFolders(spark, Seq(file))
+    assert(files == Seq(ParquetFileRef(s"file:$file", "sales.parquet")))
+    assert(files == listFilesWalk(Seq(file)))
+  }
+
+  test("scan: no located status and no block location is looked up") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.countls.impl", classOf[CountingListingFs].getName)
+    conf.setBoolean("fs.countls.impl.disable.cache", true)
+    try {
+      CountingListingFs.reset()
+      val files = Discovery.scanFolders(spark, Seq(s"countls://$tree"))
+      // one directory listing per directory of the tree, through this file
+      // system, and no LocatedFileStatus: without native IO, building one
+      // here throws, since the permission lookup wants a file: URI
+      assert(CountingListingFs.calls == (0, 0, 1 + 3 + 3 * 2 + 3 * 2 * 2 + 1))
+      assert(files.map(_.displayPath) == listFilesWalk(Seq(tree)).map(_.displayPath))
+      assert(files.forall(_.fullPath.startsWith("countls:/")))
+    } finally {
+      conf.unset("fs.countls.impl")
+      conf.unset("fs.countls.impl.disable.cache")
+    }
+  }
+}
+
+/** The local file system under its own `countls:` scheme, counting the
+  * calls through which `listFiles` builds a `LocatedFileStatus`. */
+class CountingListingFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countls:///")
+  override def getScheme: String = "countls"
+  override def listLocatedStatus(f: Path): RemoteIterator[LocatedFileStatus] = {
+    CountingListingFs.located.incrementAndGet()
+    super.listLocatedStatus(f)
+  }
+  override def getFileBlockLocations(file: FileStatus, start: Long, len: Long): Array[BlockLocation] = {
+    CountingListingFs.blocks.incrementAndGet()
+    super.getFileBlockLocations(file, start, len)
+  }
+  override def listStatusIterator(f: Path): RemoteIterator[FileStatus] = {
+    CountingListingFs.listings.incrementAndGet()
+    super.listStatusIterator(f)
+  }
+}
+
+object CountingListingFs {
+  val located  = new AtomicInteger
+  val blocks   = new AtomicInteger
+  val listings = new AtomicInteger
+  def reset(): Unit = Seq(located, blocks, listings).foreach(_.set(0))
+  /** (`listLocatedStatus`, `getFileBlockLocations`, `listStatusIterator`)
+    * calls since the last reset. */
+  def calls: (Int, Int, Int) = (located.get, blocks.get, listings.get)
 }

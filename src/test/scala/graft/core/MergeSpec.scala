@@ -33,41 +33,15 @@ class MergeSpec extends AnyFunSuite {
 
   private def ref(path: String) = ParquetFileRef(path, Discovery.fileName(path))
 
-  /** Runs `body` and returns what it gave with one entry per Spark job it
-    * started: the command line of the SQL execution the job ran under
-    * (e.g. "Execute InsertIntoHadoopFsRelationCommand ..."), or "" for a
-    * job outside one. Jobs of other threads are not counted. */
-  private def jobsOf[T](body: => T): (T, Seq[String]) = {
-    val tag   = java.util.UUID.randomUUID().toString
-    val plans = new ConcurrentHashMap[Long, String]
-    val jobs  = new ConcurrentLinkedQueue[Option[Long]]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("graft.test.jobs") == tag)
-          jobs.add(Option(e.properties.getProperty("spark.sql.execution.id")).map(_.toLong))
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
-          plans.put(s.executionId, s.sparkPlanInfo.simpleString)
-        case _ =>
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.test.jobs", tag)
-    try {
-      val out = body
-      Bridge.drainListenerBus(spark)
-      (out, jobs.asScala.toSeq.map(_.flatMap(id => Option(plans.get(id))).getOrElse("")))
-    } finally {
-      sc.setLocalProperty("graft.test.jobs", null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   /** The file format a job's command line writes, or the line itself. */
   private def writeKind(line: String): String =
     if (!line.startsWith("Execute InsertIntoHadoopFsRelationCommand")) line
     else line.split(", ").find(Set("Parquet", "CSV")).getOrElse(line)
+
+  /** The batch whose `merged/<batch>.<ext>` output a job's command line
+    * writes, or the line itself. */
+  private def batchOf(line: String): String =
+    """/merged/([^/]+)\.(parquet|csv)\.__staging__""".r.findFirstMatchIn(line).fold(line)(_.group(1))
 
   /** `n` plain parquet files of `df`'s rows, written by one job. */
   private def writeParts(df: DataFrame, n: Int, dir: String): Seq[String] = {
@@ -240,7 +214,7 @@ class MergeSpec extends AnyFunSuite {
       s"$root/nojobs/wide")
     val files = plain ++ wide
     assert(files.size == 50)
-    val (job, jobs) = jobsOf(MergeJobs.buildJob(spark, files.map(ref), 1))
+    val (job, jobs) = TestSpark.jobsOf(MergeJobs.buildJob(spark, files.map(ref), 1))
     assert(jobs.isEmpty, jobs.mkString("\n"))
     assert(job.hasSchemaMismatch)
     assert(job.readSchema == Right(Merge.readSchema(job.files.map(f => spark.read.parquet(f.fullPath).schema))))
@@ -257,9 +231,13 @@ class MergeSpec extends AnyFunSuite {
     val jobs = groups.zipWithIndex.map { case ((_, fs), i) => MergeJobs.buildJob(spark, fs, i + 1) }
     assert(jobs.map(_.hasSchemaMismatch) == Seq(true, false))
     val ((outcomes, _), started) =
-      jobsOf(MergeJobs.runAll(spark, jobs, s"$root/onejob/out", exportCsv = true))
+      TestSpark.jobsOf(MergeJobs.runAll(spark, jobs, s"$root/onejob/out", exportCsv = true))
     assert(outcomes.map(_.map(_.rows)) == Seq(Right(2L), Right(3L)))
-    assert(started.map(writeKind) == Seq("Parquet", "CSV", "Parquet", "CSV"), started.mkString("\n"))
+    // the batches run concurrently, so their jobs interleave; within a
+    // batch the parquet write precedes the CSV export that reads it back
+    val perBatch = started.groupBy(batchOf).map { case (b, lines) => b -> lines.map(writeKind) }
+    assert(perBatch == Map("drift" -> Seq("Parquet", "CSV"), "same" -> Seq("Parquet", "CSV")),
+      started.mkString("\n"))
   }
 
   test("MergeResult.rows equals the written output's count") {
@@ -365,6 +343,100 @@ class MergeSpec extends AnyFunSuite {
       .select("id").as[Long].collect().sorted.toSeq
     assert(ids("sales_2023") == Seq(1L, 2L))
     assert(ids("sales_2024") == Seq(3L, 4L))
+  }
+
+  test("runAll: batches merge concurrently; outcomes keep job order and each batch fails alone") {
+    val dir = s"$root/concurrent"
+    def batch(stem: String, rows: Seq[(Long, String)], folders: String*): Seq[ParquetFileRef] =
+      folders.zip(rows).map { case (folder, row) =>
+        val p = s"$dir/$folder/$stem.parquet"
+        writeSingle(Seq(row).toDF("id", "t"), p)
+        ref(p)
+      }
+    val one   = batch("one", Seq((1L, "a"), (2L, "b")), "x", "y")
+    val two   = batch("two", Seq((3L, "c"), (4L, "d")), "x", "y")
+    val three = batch("three", Seq((5L, "e"), (6L, "f")), "x", "y")
+    val again = batch("one", Seq((7L, "g"), (8L, "h")), "z", "w")
+    val jobs = Seq(one, two, three, again).zipWithIndex
+      .map { case (fs, i) => MergeJobs.buildJob(spark, fs, i + 1) }
+    assert(jobs.map(_.name) == Seq("one", "two", "three", "one"))
+    writeSingle(Seq((9L, "changed")).toDF("id", "t"), two(1).fullPath)
+    val (outcomes, remaining) = MergeJobs.runAll(spark, jobs, s"$dir/out", exportCsv = true)
+    val merged = s"$dir/out/merged"
+    assert(outcomes == Seq(
+      Right(MergeResult(jobs(0), 2L)),
+      Left((jobs(1), s"File changed since its batch was built: ${two(1).fullPath}")),
+      Right(MergeResult(jobs(2), 2L)),
+      Left((jobs(3), s"Output name already used in this run: $merged/one.parquet"))))
+    assert(remaining == Seq(jobs(1), jobs(3)))
+    def rows(name: String) = spark.read.parquet(s"$merged/$name.parquet").as[(Long, String)]
+      .collect().sorted.toSeq
+    assert(rows("one") == Seq((1L, "a"), (2L, "b")))
+    assert(rows("three") == Seq((5L, "e"), (6L, "f")))
+    assert(!new java.io.File(s"$merged/two.parquet").exists())
+  }
+
+  test("runAll: every write job carries the caller's Spark local properties") {
+    val dir = s"$root/props"
+    Seq("p", "q").foreach { stem =>
+      writeSingle(Seq((1L, stem)).toDF("id", "t"), s"$dir/x/$stem.parquet")
+      writeSingle(Seq((2L, stem)).toDF("id", "t"), s"$dir/y/$stem.parquet")
+    }
+    val (groups, _) = Discovery.smartBatch(Discovery.scanFolders(spark, Seq(s"$dir/x", s"$dir/y")))
+    val jobs = groups.zipWithIndex.map { case ((_, fs), i) => MergeJobs.buildJob(spark, fs, i + 1) }
+    val out  = s"$dir/out"
+    val tag  = java.util.UUID.randomUUID().toString
+    // every job started while runAll runs, from any thread, with its
+    // SQL execution's command line
+    val plans  = new ConcurrentHashMap[Long, String]
+    val tagged = new ConcurrentLinkedQueue[(Option[Long], String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        tagged.add((Option(e.properties.getProperty("spark.sql.execution.id")).map(_.toLong),
+          String.valueOf(e.properties.getProperty("graft.test.caller"))))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.sparkPlanInfo.simpleString)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.caller", tag)
+    try {
+      val (outcomes, _) = MergeJobs.runAll(spark, jobs, out, exportCsv = true)
+      assert(outcomes.forall(_.isRight), outcomes)
+      Bridge.drainListenerBus(spark)
+    } finally {
+      sc.setLocalProperty("graft.test.caller", null)
+      sc.removeSparkListener(listener)
+    }
+    val writes = tagged.asScala.toSeq.collect {
+      case (Some(id), caller) if Option(plans.get(id)).exists(_.contains(s"$out/merged/")) =>
+        (batchOf(plans.get(id)), writeKind(plans.get(id)), caller)
+    }
+    assert(writes.sorted == Seq(("p", "CSV", tag), ("p", "Parquet", tag),
+      ("q", "CSV", tag), ("q", "Parquet", tag)), writes)
+  }
+
+  test("runAll inside a QueryScope leaves no pool thread and no staging entry behind") {
+    val dir = s"$root/scoped"
+    Seq("m", "n", "o").foreach { stem =>
+      writeSingle(Seq((1L, stem)).toDF("id", "t"), s"$dir/x/$stem.parquet")
+      writeSingle(Seq((2L, stem)).toDF("id", "t"), s"$dir/y/$stem.parquet")
+    }
+    val (groups, _) = Discovery.smartBatch(Discovery.scanFolders(spark, Seq(s"$dir/x", s"$dir/y")))
+    val (outcomes, _) = QueryScope {
+      val jobs = groups.zipWithIndex.map { case ((_, fs), i) => MergeJobs.buildJob(spark, fs, i + 1) }
+      MergeJobs.runAll(spark, jobs, s"$dir/out", exportCsv = true)
+    }
+    assert(outcomes.map(_.map(_.rows)) == Seq(Right(2L), Right(2L), Right(2L)))
+    // a pool left running keeps idle workers alive for good; a shut-down
+    // one's workers are gone or exiting
+    val pool = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("graft-merge-"))
+    pool.foreach(_.join(10000))
+    assert(pool.forall(!_.isAlive), pool.map(_.getName))
+    val names = new java.io.File(s"$dir/out/merged").listFiles().map(_.getName).toSet
+    assert(names.filterNot(_.startsWith(".")) == Set("m", "n", "o").flatMap(b => Set(s"$b.parquet", s"$b.csv")))
   }
 
   test("writeSingleFile: failed write leaves no staging/tmp litter and keeps prior output") {
